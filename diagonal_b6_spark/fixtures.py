@@ -257,7 +257,11 @@ FEATURE_SCHEMA = (
 
 
 def features_table(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(feature_rows(), schema=FEATURE_SCHEMA)
+    """The fixture features as a JVM-local table: built from pandas
+    through Arrow it plans as a LocalTableScan, where a list of rows goes
+    through a pickled Python RDD and every scan of it runs a Python
+    worker."""
+    return spark.createDataFrame(pd.DataFrame(feature_rows()), schema=FEATURE_SCHEMA)
 
 
 def testdata(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -3,9 +3,11 @@
 Reference semantics: every feature is posted under its <=level-16,
 <=5-cell S2 covering plus ancestors (b6/ingest/tokens.go:9-28,
 b6/search/spatial.go:10-32,85-113).  Here the index is a DataFrame
-column: points carry their level-16 cell id (one per row); polygons and
-polylines carry an exploded covering table.  All cell math runs in
-Arrow-batched pandas UDFs over packed arrays -- never per-row Python.
+column: points carry their level-16 cell id (one per row, an
+Arrow-batched pandas UDF); polygons and polylines carry an exploded
+covering table, built by one Arrow-batched ``mapInPandas`` pass that
+covers each feature once and emits one row per covering cell with the
+cell's BUCKET_LEVEL join keys already attached.
 
 Cell ids are stored as *signed* int64 with order preserved
 (cellmath.id_to_signed) so Parquet/Spark range predicates work.
@@ -60,19 +62,6 @@ def with_point_cells(df: DataFrame, lat: str = "lat", lng: str = "lng") -> DataF
     )
 
 
-_COVER_SCHEMA = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("cell", T.LongType()),
-            T.StructField("rmin", T.LongType()),
-            T.StructField("rmax", T.LongType()),
-            T.StructField("level", T.IntegerType()),
-            T.StructField("buckets", T.ArrayType(T.LongType())),
-        ]
-    )
-)
-
-
 def _cover_one(xs: np.ndarray, ys: np.ndarray, ftype: str, max_cells: int, max_level: int):
     if ftype == "point" or len(xs) == 1:
         cells = cm.cell_id_from_latlng(ys[:1], xs[:1], max_level)
@@ -99,15 +88,13 @@ def _cover_one(xs: np.ndarray, ys: np.ndarray, ftype: str, max_cells: int, max_l
     return out
 
 
-def covering_udf(max_cells: int = cm.MAX_COVERING_CELLS, max_level: int = cm.MAX_INDEX_LEVEL):
-    @F.pandas_udf(_COVER_SCHEMA)
-    def _udf(ftype: pd.Series, xs: pd.Series, ys: pd.Series) -> pd.Series:
-        out = []
-        for t, x, y in zip(ftype, xs, ys):
-            out.append(_cover_one(np.asarray(x), np.asarray(y), t, max_cells, max_level))
-        return pd.Series(out)
-
-    return _udf
+# the feature columns the cover pass reads and carries onto every cover row,
+# then the columns it adds per covering cell
+_COVER_INPUT = ["feature_id", "feature_type", "xs", "ys", "ring_offsets"]
+_COVER_CELLS = [
+    ("cell", "long"), ("rmin", "long"), ("rmax", "long"), ("cell_level", "int"),
+    ("buckets", "array<long>"),
+]
 
 
 def feature_cover_index(
@@ -117,31 +104,39 @@ def feature_cover_index(
 ) -> DataFrame:
     """Exploded covering index: one row per (feature, covering cell), with
     the cell's descendant range [rmin, rmax] -- the Spark analogue of the
-    reference's s2:/a2: posting lists (b6/search/spatial.go:65-113)."""
-    cov = features.withColumn(
-        "cover", covering_udf(max_cells, max_level)(F.col("feature_type"), F.col("xs"), F.col("ys"))
+    reference's s2:/a2: posting lists (b6/search/spatial.go:65-113).
+
+    One ``mapInPandas`` pass covers each feature exactly once and emits
+    its cover rows directly: the feature's geometry, ``cell, rmin, rmax,
+    cell_level`` and ``buckets``, the cell's BUCKET_LEVEL equi-keys (one
+    key for a cell at or below BUCKET_LEVEL, its descendants for a
+    coarser cell).  The join builders explode ``buckets`` in the JVM.
+    It is not a scalar UDF under an ``explode``: Catalyst infers
+    ``size(cover) > 0`` from the explode and re-evaluates a deterministic
+    UDF below it, which runs the kernel three times per feature in two
+    Python stages."""
+    fields = {f.name: f.dataType.simpleString() for f in features.schema.fields}
+    schema = ", ".join(
+        [f"{c} {fields[c]}" for c in _COVER_INPUT] + [f"{c} {t}" for c, t in _COVER_CELLS]
     )
-    return cov.select(
-        "feature_id",
-        "feature_type",
-        "tags",
-        "xs",
-        "ys",
-        "ring_offsets",
-        F.explode("cover").alias("c"),
-    ).select(
-        "feature_id",
-        "feature_type",
-        "tags",
-        "xs",
-        "ys",
-        "ring_offsets",
-        F.col("c.cell").alias("cell"),
-        F.col("c.rmin").alias("rmin"),
-        F.col("c.rmax").alias("rmax"),
-        F.col("c.level").alias("cell_level"),
-        F.col("c.buckets").alias("buckets"),
-    )
+    columns = _COVER_INPUT + [c for c, _ in _COVER_CELLS]
+
+    def cover_cells(batches):
+        for pdf in batches:
+            rows = []
+            for f in pdf.itertuples(index=False):
+                cells = _cover_one(
+                    np.asarray(f.xs), np.asarray(f.ys), f.feature_type, max_cells, max_level
+                )
+                for c in cells:
+                    rows.append(
+                        (f.feature_id, f.feature_type, f.xs, f.ys, f.ring_offsets,
+                         c["cell"], c["rmin"], c["rmax"], c["level"], c["buckets"])
+                    )
+            if rows:
+                yield pd.DataFrame(rows, columns=columns)
+
+    return features.select(*_COVER_INPUT).mapInPandas(cover_cells, schema=schema)
 
 
 def tile_xy_cols(zoom: int, lat: str = "lat", lng: str = "lng"):

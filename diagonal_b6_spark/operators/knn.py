@@ -128,9 +128,15 @@ def knn_grid(
     gy = F.floor(F.col("lat") / cell_deg).cast("long")
     pts = points.withColumn("gx", gx).withColumn("gy", gy)
     pr = probes.withColumn("gx", gx).withColumn("gy", gy)
-    r = max_rings
-    offs = [(dx, dy) for dx in range(-r, r + 1) for dy in range(-r, r + 1)]
-    off_df = F.broadcast(pr.sparkSession.createDataFrame(offs, "dx long, dy long"))
+    # the (2r+1)^2 cell offsets as JVM column math over a range (a list of
+    # rows would plan as a pickled Python RDD scanned by a Python worker)
+    side = 2 * max_rings + 1
+    off_df = F.broadcast(
+        pr.sparkSession.range(side * side).select(
+            (F.floor(F.col("id") / side) - max_rings).cast("long").alias("dx"),
+            (F.col("id") % side - max_rings).alias("dy"),
+        )
+    )
     cand = (
         pr.crossJoin(off_df)
         .withColumn("ngx", F.col("gx") + F.col("dx"))

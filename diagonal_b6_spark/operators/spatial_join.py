@@ -6,10 +6,15 @@ re-check inside the iterator (b6/spatial.go:159-177, 420-507;
 `containing-areas` batches probe points by cell: fn features.go:61-105).
 Spark-first re-expression:
 
+  stage 0 (cover): one mapInPandas pass covers each area once
+          (cover.feature_cover_index); every cover row carries the area's
+          geometry, the cell's range and its BUCKET_LEVEL keys, which the
+          builders explode in the JVM -- no Python UDF on the polygon side.
   stage 1 (filter): join the point table against the polygon cover index
           on cell containment (point.cell16 within cover-cell range).
           * broadcast path: polygon cover index is small -> broadcast
-            range join (no shuffle of the big point side).
+            hash join on the bucket key + range filter (no shuffle of the
+            big point side).
           * bucketed path: both sides keyed by the level-BUCKET_LEVEL
             ancestor -> co-partitioned equi-join + range filter; an
             optional salt column splits dense buckets across reducers
@@ -78,6 +83,15 @@ def _refine_pip(
     )
 
 
+def _area_bucket_rows(polygons: DataFrame) -> DataFrame:
+    """The polygon side of both containment plans: the areas' cover rows,
+    one per (cover cell, BUCKET_LEVEL key), each with its cell's range
+    and the polygon's geometry.  The cover pass attaches the keys, so
+    exploding them here is JVM work."""
+    cov = cover_ops.feature_cover_index(polygons.filter(F.col("feature_type") == "area"))
+    return cov.select(*_GEOM_COLS, "rmin", "rmax", F.explode("buckets").alias("bucket"))
+
+
 def containment_join_broadcast(
     points: DataFrame,
     polygons: DataFrame,
@@ -98,10 +112,7 @@ def containment_join_broadcast(
     per polygon (cover cells are disjoint), so no dedup is needed."""
     if "cell16" not in points.columns:
         points = cover_ops.with_point_cells(points, lat, lng)
-    cov = cover_ops.feature_cover_index(polygons.filter(F.col("feature_type") == "area"))
-    buckets = cov.withColumn("bucket", F.explode("buckets")).select(
-        *(_GEOM_COLS + ["rmin", "rmax", "bucket"])
-    )
+    buckets = _area_bucket_rows(polygons)
     cand = points.join(F.broadcast(buckets), "bucket").filter(
         (F.col("cell16") >= F.col("rmin")) & (F.col("cell16") <= F.col("rmax"))
     )
@@ -149,13 +160,9 @@ def containment_join_bucketed(
     """
     if "cell16" not in points.columns:
         points = cover_ops.with_point_cells(points, lat, lng)
-    cov = cover_ops.feature_cover_index(polygons.filter(F.col("feature_type") == "area"))
-    # normalize polygon cover cells to bucket keys (explode coarse cells)
-    buckets = cov.withColumn(
-        "bucket_key",
-        F.explode("buckets"),
-    ).select(*(_GEOM_COLS + ["rmin", "rmax"]), F.col("bucket_key").alias("bucket"))
-    salted = buckets.crossJoin(F.broadcast(_salt_range(points.sparkSession, salt)))
+    salted = _area_bucket_rows(polygons).crossJoin(
+        F.broadcast(_salt_range(points.sparkSession, salt))
+    )
     pts = points.withColumn("salt_id", F.pmod(F.xxhash64(F.col(point_id)), F.lit(salt)))
     cand = pts.join(
         salted,

@@ -167,12 +167,13 @@ def containment_pipeline(
     strategy: str = "broadcast",
     salt: int = 8,
 ) -> DataFrame:
-    """images x areas containment pairs (the BASELINE.json join)."""
+    """images x areas containment pairs (the BASELINE.json join).  The
+    join builders add the point cells unless `images` already carries
+    `cell16`."""
     feats = features if features is not None else fixtures.features_table(spark)
-    pts = cover_ops.with_point_cells(images)
     if strategy == "broadcast":
-        return spatial_join.containment_join_broadcast(pts, feats)
-    return spatial_join.containment_join_bucketed(pts, feats, salt=salt)
+        return spatial_join.containment_join_broadcast(images, feats)
+    return spatial_join.containment_join_bucketed(images, feats, salt=salt)
 
 
 def run_flagship(

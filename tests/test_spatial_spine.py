@@ -154,7 +154,11 @@ def test_knn_grid_equals_bruteforce(spark):
 
 def test_broadcast_containment_plans_hash_join(spark):
     """Round-1 range-condition broadcast planned as BroadcastNestedLoopJoin
-    (O(N*M)); the bucket-equi-key explode must plan a hash join."""
+    (O(N*M)); the bucket-equi-key explode must plan a hash join.  Both
+    builders cover the polygon side in one Python pass: no ArrowEvalPython
+    there (only the point side's cell16_udf), exactly two MapInPandas
+    nodes (the cover pass and the refine), and a JVM-local feature scan
+    rather than a pickled Python RDD."""
     from diagonal_b6_spark import fixtures
     from diagonal_b6_spark.operators import spatial_join
 
@@ -164,10 +168,57 @@ def test_broadcast_containment_plans_hash_join(spark):
         (F.lit(51.52) + F.col("id") * 1e-4).alias("lat"),
         (F.lit(-0.14) + F.col("id") * 1e-4).alias("lng"),
     )
-    out = spatial_join.containment_join_broadcast(pts, fixtures.features_table(spark), point_id="pid")
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    feats = fixtures.features_table(spark)
+    # the bucketed builder replicates its cover rows over the salt range
+    # with one (tiny) nested-loop cross join; its bucket join is a hash join
+    for builder, nested_loops in (
+        (spatial_join.containment_join_broadcast, 0),
+        (spatial_join.containment_join_bucketed, 1),
+    ):
+        out = builder(pts, feats, point_id="pid")
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastHashJoin" in plan, builder.__name__
+        assert plan.count("BroadcastNestedLoopJoin") == nested_loops, builder.__name__
+        python_evals = [ln for ln in plan.splitlines() if "ArrowEvalPython" in ln]
+        assert python_evals and all("cell16_udf(" in ln for ln in python_evals), plan
+        assert plan.count("MapInPandas") == 2, plan
+        assert "MapInPandas cover_cells(" in plan and "MapInPandas refine(" in plan
+        assert "ExistingRDD" not in plan, plan
+
+
+def test_cover_index_matches_cover_kernel(spark):
+    """feature_cover_index emits exactly the cover kernel's rows, one per
+    (feature, covering cell) in kernel order, each carrying the feature's
+    geometry.  A 12 km square is covered by cells coarser than
+    BUCKET_LEVEL, so its rows carry several bucket keys."""
+    from diagonal_b6_spark.kernels import cellmath as cm
+
+    xs, ys = fixtures._square(51.50, -0.12, 6000.0)
+    big = {
+        "feature_id": "area/test/big", "feature_type": "area", "ns": "test/fixtures",
+        "tags": {}, "xs": xs, "ys": ys, "ring_offsets": [0],
+    }
+    rows = [f for f in fixtures.feature_rows() if f["feature_type"] == "area"] + [big]
+    feats = spark.createDataFrame(pd.DataFrame(rows), schema=fixtures.FEATURE_SCHEMA)
+    got: dict[str, list] = {}
+    for r in cover_ops.feature_cover_index(feats).collect():
+        f = next(f for f in rows if f["feature_id"] == r.feature_id)
+        assert (r.feature_type, r.xs, r.ys, r.ring_offsets) == (
+            f["feature_type"], f["xs"], f["ys"], f["ring_offsets"]
+        )
+        got.setdefault(r.feature_id, []).append(
+            {"cell": r.cell, "rmin": r.rmin, "rmax": r.rmax, "level": r.cell_level,
+             "buckets": list(r.buckets)}
+        )
+    for f in rows:
+        want = cover_ops._cover_one(
+            np.asarray(f["xs"]), np.asarray(f["ys"]), f["feature_type"],
+            cm.MAX_COVERING_CELLS, cm.MAX_INDEX_LEVEL,
+        )
+        assert got[f["feature_id"]] == want, f["feature_id"]
+    big_rows = got["area/test/big"]
+    assert min(c["level"] for c in big_rows) < cm.BUCKET_LEVEL
+    assert max(len(c["buckets"]) for c in big_rows) > 1
 
 
 def test_containment_auto_switch(spark):
