@@ -2,7 +2,7 @@
 
 PY ?= python
 
-.PHONY: test tier1 bench scaling package submit-local clean
+.PHONY: test tier1 scaling package submit-local clean
 
 test:
 	$(PY) -m pytest tests/ -x -q
@@ -12,9 +12,6 @@ test:
 tier1:
 	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
 	timeout -k 10 2670 $(PY) -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
-
-bench:
-	$(PY) bench.py
 
 scaling:
 	$(PY) bench.py --scaling

@@ -1,17 +1,21 @@
-"""Benchmark harness (driver contract + BASELINE.md measurement protocol).
+"""N->4N scaling protocol (BASELINE.md).
 
-Default mode: run the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE JSON line:
+    python bench.py --scaling
 
-    {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+Runs the flagship spatial-join + tile-assignment pipeline on the SAME
+synthetic image input at two parallelism levels (local[N] and local[4N],
+the sandbox stand-in for N vs 4N executors), 1 warm-up + 2 timed runs
+each, and reports median images/sec at both plus the scaling efficiency
+(T_N / T_4N) / 4 as ONE JSON line, also written to
+BENCH_scaling_result.json.  Each parallelism level runs in its own
+subprocess (`--scaling-child`) because a JVM's local[K] master is fixed
+at SparkContext creation.
 
-`--scaling` mode (BASELINE.md protocol): run the flagship spatial-join +
-tile-assignment pipeline on the SAME synthetic image input at two
-parallelism levels (local[N] and local[4N], sandbox stand-in for N vs 4N
-executors per the north rule), 1 warm-up + 3 timed runs each, and report
-median images/sec at both plus scaling efficiency (T_N / T_4N) / 4.
-Each parallelism level runs in its own subprocess because a JVM's
-local[K] master is fixed at SparkContext creation.
+Knobs: SPARK_GRAFT_BENCH_IMAGES (default 19M), SPARK_GRAFT_BENCH_N
+(default 1), SPARK_GRAFT_BENCH_INPUT (parquet path of the image table).
+
+Steady-state throughput and latency are measured by perfbench
+(`python3 perfbench/run.py`), not here.
 """
 
 from __future__ import annotations
@@ -23,127 +27,31 @@ import subprocess
 import sys
 import time
 
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-# Headline queries: the flagship geo pipeline ops plus one representative of
-# each operator family (relational agg, join+topk, dedup, text, similarity).
-# geo_nearest_poi exercises the codegen kNN stage.
-#
-# r5 (VERDICT r4 #4): the headline measures the plans you'd RUN at 100x --
-# geo_knn_grid (single equi-join shuffle) replaces geo_knn (the O(P*N)
-# broadcast-cross brute force, kept as the oracle baseline in the gate), and
-# embedding_knn_arrow (Arrow einsum cosine) replaces the interpreted
-# higher-order-function embedding_knn.  Both replacements are oracle-green
-# and rank-identical to the plans they replace; cross-round per-query
-# history for the two retired keys ends at r4 (BENCH/BASELINE.md note).
-HEADLINE = [
-    "geo_pip",
-    "geo_pip_salted",
-    "geo_tiles",
-    "geo_knn_grid",
-    "geo_cap",
-    "geo_nearest_poi",
-    "tpch_q1",
-    "tpch_q3",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "token_count",
-    "embedding_knn_arrow",
-]
-
 SCALING_IMAGES = int(os.environ.get("SPARK_GRAFT_BENCH_IMAGES", "19000000"))
 SCALING_N = int(os.environ.get("SPARK_GRAFT_BENCH_N", "1"))
-
-
-def _warm_input_files() -> None:
-    """Pull every input parquet through the page cache before timing so
-    the headline measures COMPUTE on warm data (the cross-round
-    comparison basis), not whatever cache state an unrelated job left
-    behind — a 52 GB scaling run evicts these files and a cold read
-    inflates one victim query 5-15x (root-caused in NOTES_r4.md)."""
-    import glob
-
-    for p in sorted(glob.glob(os.path.join(SF_DIR, "*.parquet"))):
-        with open(p, "rb") as f:
-            while f.read(1 << 24):
-                pass
-
-
-def _bench_queries() -> dict:
-    from diagonal_b6_spark import catalog
-    from diagonal_b6_spark.session import get_spark
-
-    _warm_input_files()
-    spark = get_spark(
-        "bench", cores=CPUS, extra_conf={"spark.ui.showConsoleProgress": "false"}
-    )
-    sf = float(os.path.basename(SF_DIR.rstrip("/")).replace("sf", "") or 0.1)
-
-    times: dict[str, float] = {}
-    for name in HEADLINE:
-        fn = catalog.QUERIES[name]
-        fn(spark, SF_DIR).count()  # warm-up (JIT, code cache, file listing)
-        # Steady-state protocol (r4 addendum): two timed runs, keep the
-        # MIN.  On a freshly booted host the first post-warm-up run of a
-        # shuffle-heavy query can still pay 2-4x JIT/compile residue
-        # (measured: geo_pip_salted 17.6 -> 4.3 -> 3.2 s across identical
-        # runs); one warm-up is not always enough and a single timed run
-        # then records compiler noise, not the plan.
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            fn(spark, SF_DIR).count()
-            best = min(best, time.perf_counter() - t0)
-        times[name] = round(best, 3)
-
-    catalog.release_caches()
-    total = round(sum(times.values()), 3)
-    payload = json.dumps(
-        {
-            "metric": "headline_queries_total_time",
-            "value": total,
-            "unit": "sec",
-            "queries": times,
-            "sf": sf,
-            "cpus": CPUS,
-        }
-    )
-    # The result must be un-losable: persist it to a file at the repo root,
-    # then stop Spark FIRST (so Python-worker teardown noise — e.g. daemon.py
-    # BrokenPipeError traces — cannot follow the JSON line on the combined
-    # stdout/stderr stream a caller may capture), and only then print the
-    # JSON line as the process's final act.
-    result_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_result.json")
-    with open(result_path, "w") as f:
-        f.write(payload + "\n")
-    spark.stop()
-    sys.stderr.flush()
-    print(payload, flush=True)
-    return times
 
 
 def _scaling_child(cores: int, n_images: int, timed_runs: int) -> None:
     """Child process: run the flagship pipeline at local[cores]; print JSON.
 
-    The image table materializes to parquet ONCE (untimed) — the Iceberg
+    The image table materializes to parquet ONCE (untimed) -- the Iceberg
     input-table posture; timed runs cover scan -> cell cover -> salted
     containment join -> PIP refine -> tile assignment (BASELINE.md step 3:
-    exclude one-time input generation).
+    exclude one-time input generation).  `cores` 0 lets get_spark pick
+    the host's cores (the generation-only invocation).
     """
     from diagonal_b6_spark import fixtures
     from diagonal_b6_spark.pipeline import run_flagship
     from diagonal_b6_spark.session import get_spark
 
-    # Identical task counts at both parallelism levels (64 scan splits, 64
+    # Identical task counts at both parallelism levels (16 scan splits, 8
     # shuffle partitions) so fixed per-task overhead is symmetric and the
     # measured difference is compute parallelism -- mirroring a cluster
     # where partition sizing is fixed by data, not by executor count.
     n_tasks = 16
     spark = get_spark(
         f"scaling_{cores}",
-        cores=cores,
+        cores=cores or None,
         # the shuffled candidate set is small; 8 reduce tasks cut the
         # per-task Python handshake cost of the refine stage
         shuffle_partitions=8,
@@ -187,33 +95,26 @@ def _scaling_child(cores: int, n_images: int, timed_runs: int) -> None:
 
 
 def _run_child(cores: int, n_images: int, timed_runs: int = 2) -> dict:
-    env = dict(os.environ)
     out = subprocess.run(
         [sys.executable, __file__, "--scaling-child", str(cores), str(n_images), str(timed_runs)],
         capture_output=True,
         text=True,
-        env=env,
         cwd=os.path.dirname(os.path.abspath(__file__)),
-        check=True,
     )
-    for line in out.stdout.splitlines():
-        if line.startswith("SCALING_RESULT "):
-            return json.loads(line[len("SCALING_RESULT "):])
-    raise RuntimeError(f"no SCALING_RESULT in child output:\n{out.stdout}\n{out.stderr}")
+    if out.returncode == 0:
+        for line in out.stdout.splitlines():
+            if line.startswith("SCALING_RESULT "):
+                return json.loads(line[len("SCALING_RESULT "):])
+    raise RuntimeError(
+        f"scaling child (cores={cores}, runs={timed_runs}) failed:\n{out.stdout}\n{out.stderr}"
+    )
 
 
 def _bench_scaling() -> dict:
     n = SCALING_N
     # pre-generate the input table at full machine parallelism (untimed)
     # so the low-parallelism child doesn't pay generation at N cores
-    gen = subprocess.run(
-        [sys.executable, __file__, "--scaling-child", str(CPUS), str(SCALING_IMAGES), "0"],
-        capture_output=True,
-        text=True,
-        cwd=os.path.dirname(os.path.abspath(__file__)),
-    )
-    if gen.returncode != 0:
-        raise RuntimeError(f"input generation failed:\n{gen.stdout}\n{gen.stderr}")
+    _run_child(0, SCALING_IMAGES, timed_runs=0)
     lo = _run_child(n, SCALING_IMAGES)
     hi = _run_child(4 * n, SCALING_IMAGES)
     eff = {
@@ -246,9 +147,10 @@ def _bench_scaling() -> dict:
 
 
 if __name__ == "__main__":
-    if len(sys.argv) > 1 and sys.argv[1] == "--scaling-child":
+    if sys.argv[1:2] == ["--scaling-child"]:
         _scaling_child(int(sys.argv[2]), int(sys.argv[3]), int(sys.argv[4]))
-    elif len(sys.argv) > 1 and sys.argv[1] == "--scaling":
+    elif sys.argv[1:2] == ["--scaling"]:
         _bench_scaling()
     else:
-        _bench_queries()
+        print("usage: python bench.py --scaling", file=sys.stderr)
+        sys.exit(2)

@@ -31,6 +31,7 @@ from .operators import knn as knn_ops
 from .operators import similarity as sim_ops
 from .operators import spatial_join
 from .operators import text as text_ops
+from .operators.gridjoin import haversine_col
 
 # --- deterministic derived geometry (identical SQL text both engines) ------
 
@@ -358,23 +359,6 @@ SELECT event_id, gh8, substring(gh8, 1, 5) AS gh5 FROM gh
 """
 
 
-def _hav_col(y1, x1, y2, x2):
-    """Haversine meters as a JVM column expression (mirrors _HAV /
-    kernels/geom.py: radians first, then subtract)."""
-    return (
-        F.lit(2.0)
-        * F.lit(6371010.0)
-        * F.asin(
-            F.sqrt(
-                F.pow(F.sin((F.radians(y2) - F.radians(y1)) / 2), 2)
-                + F.cos(F.radians(y1))
-                * F.cos(F.radians(y2))
-                * F.pow(F.sin((F.radians(x2) - F.radians(x1)) / 2), 2)
-            )
-        )
-    )
-
-
 def q_geo_connect_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connection clustering + vertex snapping (the reference's
     Connections.Cluster, operators/network.cluster_connections) under a
@@ -405,8 +389,8 @@ def q_geo_connect_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = F.col("v")
     y = [v[i]["lat"] for i in range(3)]
     x = [v[i]["lng"] for i in range(3)]
-    c1 = _hav_col(y[0], x[0], y[1], x[1])
-    c2 = _hav_col(y[1], x[1], y[2], x[2])
+    c1 = haversine_col(y[0], x[0], y[1], x[1])
+    c2 = haversine_col(y[1], x[1], y[2], x[2])
     base = agg.select(
         F.col("g"),
         F.concat(F.lit("p"), F.col("g")).alias("path_id"),
@@ -2563,16 +2547,6 @@ WITH {_GRAPH_EDGES_CTE},
 {_graph_relax_ctes()}
 SELECT origin, count(*) AS n_reachable FROM d{GRAPH_ROUNDS} WHERE dist <= 60 GROUP BY 1
 """
-
-
-def q_graph_dijkstra(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact per-origin Dijkstra, cogrouped distributed edge feed
-    (rows-only check; pytest pins it against the iterative path run to
-    convergence)."""
-    routes = graph_ops.dijkstra_cogrouped(
-        _graph_origins(spark), _graph_edges(spark, sf_dir)
-    )
-    return routes.select("origin", "node", F.col("dist").cast("long").alias("dist"), "pred")
 
 
 def q_graph_paths_to_reach(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -28,17 +28,6 @@ from pyspark.sql import functions as F
 
 
 @dataclass
-class PartitionEntry:
-    key: str
-    path: str
-    rows: int
-    bytes: int
-    wall_ms: float
-    status: str = "complete"
-    recomputed: bool = True  # False when a resume skipped this partition
-
-
-@dataclass
 class Manifest:
     root: str
     snapshot_id: str = field(default_factory=lambda: uuid.uuid4().hex)

@@ -62,10 +62,6 @@ def _iter_ring(head):
             break
 
 
-def _poly_points(head):
-    return [(v.x, v.y) for v in _iter_ring(head) if not v.intersect]
-
-
 def point_in_ring(px: float, py: float, xs: np.ndarray, ys: np.ndarray) -> bool:
     """Even-odd PIP, half-open edge rule (same as kernels/geom)."""
     inside = False

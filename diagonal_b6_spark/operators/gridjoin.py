@@ -29,7 +29,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-EARTH_RADIUS_M = 6371010.0
+from ..kernels.geom import EARTH_RADIUS_M
+
 M_PER_DEG = float(np.radians(1.0) * EARTH_RADIUS_M)  # ~111195.08
 
 
@@ -78,11 +79,24 @@ def explode_bbox_cells(
 def haversine_col(lat1, lng1, lat2, lng2):
     """Haversine meters as a whole-stage-codegen column expression
     (identical formula to kernels/geom.haversine_m)."""
+    return haversine_a_to_m(haversine_a_col(lat1, lng1, lat2, lng2))
+
+
+def haversine_a_col(lat1, lng1, lat2, lng2):
+    """The haversine term a (sin^2 of half the central angle).  Meters
+    are non-decreasing in a, so the nearest of several points can take
+    the least a and convert once: haversine_a_to_m(least(a_i)) equals
+    least(haversine_col_i) bit for bit."""
     rlat1, rlng1 = F.radians(lat1), F.radians(lng1)
     rlat2, rlng2 = F.radians(lat2), F.radians(lng2)
-    a = F.pow(F.sin((rlat2 - rlat1) / 2), 2) + F.cos(rlat1) * F.cos(rlat2) * F.pow(
+    return F.pow(F.sin((rlat2 - rlat1) / 2), 2) + F.cos(rlat1) * F.cos(rlat2) * F.pow(
         F.sin((rlng2 - rlng1) / 2), 2
     )
+
+
+def haversine_a_to_m(a):
+    """Meters from the haversine term, with a clamped to 1 as
+    kernels/geom.haversine_m clamps it."""
     return 2 * F.lit(EARTH_RADIUS_M) * F.asin(F.sqrt(F.least(a, F.lit(1.0))))
 
 

@@ -152,9 +152,9 @@ def hex_nearest(
     p = with_hex_cells(points, res).select(
         point_id, "lat", "lng", F.col("hex_id").alias("nbr_id")
     )
-    from .knn import _haversine_col
+    from .gridjoin import haversine_col
 
-    d = _haversine_col(F.col("lat"), F.col("lng"), F.col("_olat"), F.col("_olng"))
+    d = haversine_col(F.col("lat"), F.col("lng"), F.col("_olat"), F.col("_olng"))
     pairs = (
         p.join(cand, "nbr_id")
         .where(F.col(point_id) != F.col("_oid"))

@@ -18,23 +18,10 @@ Two implementations:
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ..kernels import geom
-
-
-def _haversine_col(lat1, lng1, lat2, lng2):
-    """Haversine as a JVM-side column expression (whole-stage codegen)."""
-    rlat1, rlng1 = F.radians(lat1), F.radians(lng1)
-    rlat2, rlng2 = F.radians(lat2), F.radians(lng2)
-    a = F.pow(F.sin((rlat2 - rlat1) / 2), 2) + F.cos(rlat1) * F.cos(rlat2) * F.pow(
-        F.sin((rlng2 - rlng1) / 2), 2
-    )
-    return 2 * F.lit(geom.EARTH_RADIUS_M) * F.asin(F.sqrt(a))
+from .gridjoin import haversine_a_col, haversine_a_to_m, haversine_col
 
 
 def knn_bruteforce(
@@ -53,7 +40,7 @@ def knn_bruteforce(
     with_dist = joined.select(
         F.col(f"pr.{probe_id}").alias(probe_id),
         F.col(f"pt.{point_id}").alias(point_id),
-        _haversine_col(
+        haversine_col(
             F.col("pr.lat"), F.col("pr.lng"), F.col("pt.lat"), F.col("pt.lng")
         ).alias("dist_m"),
     )
@@ -78,7 +65,7 @@ def nearest_expr(points: DataFrame, pois: list[tuple[str, float, float]],
     """
     structs = [
         F.struct(
-            _haversine_col(F.lit(plat), F.lit(plng), F.col(lat), F.col(lng)).alias("d"),
+            haversine_col(F.lit(plat), F.lit(plng), F.col(lat), F.col(lng)).alias("d"),
             F.lit(pid).alias("poi"),
         )
         for pid, plat, plng in pois
@@ -93,12 +80,14 @@ def nearest_dist_expr(pois: list[tuple[str, float, float]],
                       lat: str = "lat", lng: str = "lng"):
     """Distance to the nearest of a small broadcast POI set as a least()
     chain over plain doubles -- full whole-stage codegen (struct least
-    falls back to interpreted comparison and is ~10x slower)."""
-    havs = [
-        _haversine_col(F.lit(plat), F.lit(plng), F.col(lat), F.col(lng))
+    falls back to interpreted comparison and is ~10x slower).  The chain
+    compares haversine terms and converts the least one to meters once
+    (equal to the least of the per-POI distances, see haversine_a_col)."""
+    terms = [
+        haversine_a_col(F.lit(plat), F.lit(plng), F.col(lat), F.col(lng))
         for _, plat, plng in pois
     ]
-    return F.least(*havs) if len(havs) > 1 else havs[0]
+    return haversine_a_to_m(F.least(*terms) if len(terms) > 1 else terms[0])
 
 
 def knn_grid(
@@ -157,7 +146,7 @@ def knn_grid(
     )
     with_dist = cand.withColumn(
         "dist_m",
-        _haversine_col(F.col("_plat"), F.col("_plng"), F.col("_lat"), F.col("_lng")),
+        haversine_col(F.col("_plat"), F.col("_plng"), F.col("_lat"), F.col("_lng")),
     )
     w = Window.partitionBy(probe_id).orderBy(F.col("dist_m").asc(), F.col(point_id).asc())
     return (

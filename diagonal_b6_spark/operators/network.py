@@ -454,8 +454,6 @@ def elevation_gain_edges(features: DataFrame) -> DataFrame:
     path length) -- all JVM expressions, no Python."""
     from pyspark.sql import Window
 
-    from .knn import _haversine_col
-
     # WalkingTimeWeights.IsUseable (graph.go:221-226): any #highway path
     # OR a diagonal=connection stub (either tag spelling; see _network)
     hw = features.filter(
@@ -479,7 +477,7 @@ def elevation_gain_edges(features: DataFrame) -> DataFrame:
         "seg_idx",
         _vertex_key(F.col("y1"), F.col("x1")).alias("src"),
         _vertex_key(F.col("y2"), F.col("x2")).alias("dst"),
-        _haversine_col(F.col("y1"), F.col("x1"), F.col("y2"), F.col("x2")).alias(
+        gridjoin.haversine_col(F.col("y1"), F.col("x1"), F.col("y2"), F.col("x2")).alias(
             "dist_m"
         ),
     ).join(factors, "path_id", "left")

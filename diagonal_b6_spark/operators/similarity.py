@@ -36,13 +36,6 @@ def _norm(a):
     return F.sqrt(_dot(a, a))
 
 
-def with_unit_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    n = _norm(F.col(vec_col))
-    return df.withColumn(
-        "_unit", F.transform(F.col(vec_col), lambda x: x.cast("double") / n)
-    )
-
-
 def _brute_topk(
     vectors: DataFrame,
     probes: DataFrame,

@@ -280,8 +280,6 @@ def distance_join(
     radius_m of a center.  Cell prefilter via the cap covering; the exact
     haversine refine is a pure column expression (whole-stage codegen --
     no Arrow round-trip of the prefiltered table)."""
-    from .knn import _haversine_col
-
     if "cell16" not in points.columns:
         points = cover_ops.with_point_cells(points, lat, lng)
     cap = cm.covering_cap(center_lat, center_lng, radius_m)
@@ -292,7 +290,9 @@ def distance_join(
         c = (F.col("cell16") >= F.lit(lo)) & (F.col("cell16") <= F.lit(hi))
         cond = c if cond is None else (cond | c)
     pre = points.filter(cond)
-    dist = _haversine_col(
+    from .gridjoin import haversine_col
+
+    dist = haversine_col(
         F.col(lat), F.col(lng), F.lit(center_lat), F.lit(center_lng)
     )
     return pre.withColumn("dist_m", dist).filter(F.col("dist_m") <= radius_m)

@@ -1,8 +1,7 @@
 """Edge-weight builders for the routing family (reference:
-b6/graph/graph.go:32-264 -- WalkingTimeWeights, BusTimeWeights,
-CarTimeWeights with one-way handling, and ElevationWeights' Naismith
-climb penalty; peak/off-peak factors follow the transit weighting in
-graph.go's bus path).
+b6/graph/graph.go:32-311 -- CarTimeWeights with one-way handling,
+ElevationWeights' Naismith climb penalty, and the WeightsFromOptions
+dispatcher over walking / transit / elevation weights).
 
 Everything is a pure column expression over an edge table
 (src, dst, dist_m [, elev_gain_m, oneway]) producing (src, dst, w) fit
@@ -11,13 +10,11 @@ ZERO shuffles -- direction handling is a unionByName of a filtered
 reversed projection, which Catalyst pipelines into the first join of the
 traversal.
 
-Semantics:
-  * walking: symmetric, w = dist / walk_speed
-  * car: one-way respected -- reverse edges only where NOT oneway
+Semantics of ``car_weights``:
+  * one-way respected -- reverse edges only where NOT oneway
   * Naismith: climbing adds `climb_s_per_m` seconds per meter of
     ASCENT only (descent free at this granularity), reverse direction
     sees the negated gain
-  * transit peak: base weight scaled by `peak_factor` during peak
 """
 
 from __future__ import annotations
@@ -25,35 +22,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-WALK_SPEED_M_S = 1.4
 CAR_SPEED_M_S = 13.9
-NAISMITH_S_PER_M_CLIMB = 6.0  # ~1h per 600 m of ascent
-PEAK_FACTOR = 1.5
 
 
 def _naismith_cost(dist_col, gain_col, speed_m_s: float, climb_s_per_m: float):
     return dist_col / F.lit(speed_m_s) + F.lit(climb_s_per_m) * F.greatest(
         gain_col, F.lit(0.0)
     )
-
-
-def walking_weights(
-    edges: DataFrame,
-    speed_m_s: float = WALK_SPEED_M_S,
-    climb_s_per_m: float = NAISMITH_S_PER_M_CLIMB,
-) -> DataFrame:
-    """Symmetric walking time with the Naismith ascent penalty; the
-    reverse direction sees the negated elevation gain."""
-    gain = F.coalesce(F.col("elev_gain_m"), F.lit(0.0))
-    fwd = edges.select(
-        "src", "dst",
-        _naismith_cost(F.col("dist_m"), gain, speed_m_s, climb_s_per_m).alias("w"),
-    )
-    rev = edges.select(
-        F.col("dst").alias("src"), F.col("src").alias("dst"),
-        _naismith_cost(F.col("dist_m"), -gain, speed_m_s, climb_s_per_m).alias("w"),
-    )
-    return fwd.unionByName(rev)
 
 
 def car_weights(
@@ -74,14 +49,6 @@ def car_weights(
         _naismith_cost(F.col("dist_m"), -gain, speed_m_s, climb_s_per_m).alias("w"),
     )
     return fwd.unionByName(rev)
-
-
-def transit_weights(
-    edges: DataFrame, peak: bool, peak_factor: float = PEAK_FACTOR
-) -> DataFrame:
-    """Peak/off-peak scaling of a base time weight column `w`."""
-    factor = F.lit(peak_factor if peak else 1.0)
-    return edges.select("src", "dst", (F.col("w") * factor).alias("w"))
 
 
 # the reference's walking speed constant (graph.go:20): 4.5 km/h

@@ -1,14 +1,17 @@
 """The flagship pipeline (SURVEY.md §7.1 step 2, BASELINE.json metric):
 
     images -> cell cover -> spatial containment join (salted/bucketed or
-    broadcast) -> PIP refine -> tile assignment (z12, z16) -> checkpoint
-    with per-bucket lineage counters.
+    broadcast) -> PIP refine -> tile assignment (z12, z16) -> optional
+    checkpoint snapshot partitioned by zoom, with per-partition counters.
 
-This is the job bench.py times at two parallelism levels and the job the
-resume test kills halfway.
+perfbench's `flagship_join` workload times `run_flagship`,
+`bench.py --scaling` runs it at two parallelism levels, and
+`jobs/flagship_job.py` submits it through spark-submit.
 """
 
 from __future__ import annotations
+
+import concurrent.futures as cf
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -184,8 +187,9 @@ def run_flagship(
     zooms: tuple[int, ...] = (12, 16),
     images_path: str | None = None,
 ) -> dict:
-    """Full run; returns counters. With checkpoint_root set, tile
-    assignments checkpoint per zoom-12 tile bucket with lineage.
+    """Full run; returns counters. With checkpoint_root set, the tile
+    assignments are also written as a snapshot partitioned by zoom, and
+    its per-partition row counts give `tile_rows`.
     With images_path set, reads a pre-materialized image table from
     parquet (the Iceberg-table posture; generation excluded from timing
     per BASELINE.md protocol step 3)."""
@@ -195,53 +199,39 @@ def run_flagship(
         images = fixtures.images_table(spark, n_images)
     pts = cover_ops.with_point_cells(images)
     containment = containment_pipeline(spark, pts, strategy=strategy)
-    if not checkpoint_root:
-        # the containment count and the fused kNN+tile aggregate are
-        # independent jobs: submit both CONCURRENTLY so driver-side
-        # serial costs (scheduling, AQE planning, Python handshakes) are
-        # paid once in wall-clock, not twice -- exactly what a real
-        # driver does with independent outputs
-        import concurrent.futures as cf
-
-        dist = knn_ops.nearest_dist_expr(poi_list(spark))
-        tile_sum = None
-        for z in zooms:
-            x, y = cover_ops.tile_xy_cols(z)
-            s = x + y
-            tile_sum = s if tile_sum is None else (tile_sum + s)
-        agg_df = images.agg(
-            F.count("*").alias("n"),
-            F.sum(F.round(dist, 3)).alias("knn_ck"),
-            F.sum(tile_sum).alias("tile_ck"),
-        )
-        with cf.ThreadPoolExecutor(max_workers=2) as pool:
-            f_pairs = pool.submit(containment.count)
-            f_agg = pool.submit(lambda: agg_df.collect()[0])
-            n_pairs = f_pairs.result()
-            row = f_agg.result()
-        return {
-            "images": n_images,
-            "containment_pairs": n_pairs,
-            "tile_rows": row["n"] * len(zooms),
-            "tile_checksum": row["tile_ck"],
-            "knn_checksum": round(row["knn_ck"], 1) if row["knn_ck"] is not None else None,
-        }
-    # checkpointing path: the tile snapshot write is the dependent job
-    n_pairs = containment.count()
     dist = knn_ops.nearest_dist_expr(poi_list(spark))
-    knn_row = images.agg(
-        F.count("*").alias("n"), F.sum(F.round(dist, 3)).alias("ck")
-    ).collect()[0]
-    knn_checksum = knn_row["ck"]
-    tiles = tile_assignments(pts, zooms)
-    m = ckpt.write_snapshot(
-        tiles, checkpoint_root, "zoom", provenance=f"tile_assignments(n={n_images})"
+    tile_sum = None
+    for z in zooms:
+        x, y = cover_ops.tile_xy_cols(z)
+        s = x + y
+        tile_sum = s if tile_sum is None else (tile_sum + s)
+    agg_df = images.agg(
+        F.count("*").alias("n"),
+        F.sum(F.round(dist, 3)).alias("knn_ck"),
+        F.sum(tile_sum).alias("tile_ck"),
     )
-    n_tiles = sum(p["rows"] for p in m.partitions.values())
+    # the containment count and the fused kNN+tile aggregate are
+    # independent jobs: submit both CONCURRENTLY so driver-side serial
+    # costs (scheduling, AQE planning, Python handshakes) are paid once
+    # in wall-clock, not twice
+    with cf.ThreadPoolExecutor(max_workers=2) as pool:
+        f_pairs = pool.submit(containment.count)
+        f_agg = pool.submit(lambda: agg_df.collect()[0])
+        n_pairs = f_pairs.result()
+        row = f_agg.result()
+    tile_rows = row["n"] * len(zooms)
+    if checkpoint_root:
+        m = ckpt.write_snapshot(
+            tile_assignments(images, zooms),
+            checkpoint_root,
+            "zoom",
+            provenance=f"tile_assignments(n={n_images})",
+        )
+        tile_rows = sum(p["rows"] for p in m.partitions.values())
     return {
         "images": n_images,
         "containment_pairs": n_pairs,
-        "tile_rows": n_tiles,
-        "tile_checksum": None,
-        "knn_checksum": round(knn_checksum, 1) if knn_checksum is not None else None,
+        "tile_rows": tile_rows,
+        "tile_checksum": row["tile_ck"],
+        "knn_checksum": round(row["knn_ck"], 1) if row["knn_ck"] is not None else None,
     }

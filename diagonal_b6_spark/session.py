@@ -2,7 +2,8 @@
 
 Scale posture: AQE on (runtime skew splitting + partition coalescing),
 Arrow enabled for all pandas-UDF kernels, shuffle partitions sized to the
-local core count (on a real cluster this is set per-job; see bench.py).
+local core count (on a real cluster this is set per-job).  The core count
+is $SPARK_GRAFT_CPUS when set, else the cores this process may run on.
 """
 
 from __future__ import annotations
@@ -19,7 +20,7 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
     builder = (

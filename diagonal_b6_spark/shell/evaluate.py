@@ -208,8 +208,7 @@ def _find(env: Env, q) -> DataFrame:
             "semi",
         )
     if isinstance(q, QIntersectsCap):
-        from ..kernels import geom
-        from ..operators.knn import _haversine_col
+        from ..operators.gridjoin import haversine_col
 
         # Feature intersects the cap iff any vertex is within radius; for
         # the point type this is the reference's exact cap test
@@ -219,7 +218,7 @@ def _find(env: Env, q) -> DataFrame:
             "feature_id", F.explode(F.arrays_zip("xs", "ys")).alias("v")
         ).select("feature_id", F.col("v.ys").alias("lat"), F.col("v.xs").alias("lng"))
         near = v.filter(
-            _haversine_col(F.col("lat"), F.col("lng"), F.lit(q.lat), F.lit(q.lng))
+            haversine_col(F.col("lat"), F.col("lng"), F.lit(q.lat), F.lit(q.lng))
             <= q.radius_m
         )
         return feats.join(
@@ -322,10 +321,6 @@ def _fn_find_feature_typed(ftype):
         return out
 
     return fn
-
-
-def _fn_all(env):
-    return env.features
 
 
 def _fn_take(env, coll, n):

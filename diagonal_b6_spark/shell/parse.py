@@ -446,10 +446,3 @@ def parse_expression(expression: str):
     if t.kind != "EOF":
         raise ParseError(f"trailing input {t.text!r} at {t.pos}")
     return out
-
-
-def parse_expression_with_lhs(expression: str, lhs):
-    """ParseExpressionWithLHS (shell.go:622-630): the UI's `|`-continuation
-    sugar -- the previous result is piped into the parsed expression."""
-    out = parse_expression(expression)
-    return Call(fn=out, args=[lhs], pipelined=True)

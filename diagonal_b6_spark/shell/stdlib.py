@@ -62,7 +62,7 @@ from ..operators import graph as graph_ops
 from ..operators import network as net_ops
 from ..operators import sightline as sightline_ops
 from ..operators import weights as weights_ops
-from ..operators.knn import _haversine_col
+from ..operators.gridjoin import haversine_col
 from ..operators.network import _vertex_key
 from ..sources import changes_yaml
 from ..sources import geojson as geojson_src
@@ -236,7 +236,7 @@ def _network(env: Env) -> dict:
         "y2",
         _vertex_key(F.col("y1"), F.col("x1")).alias("src"),
         _vertex_key(F.col("y2"), F.col("x2")).alias("dst"),
-        _haversine_col(F.col("y1"), F.col("x1"), F.col("y2"), F.col("x2")).alias(
+        haversine_col(F.col("y1"), F.col("x1"), F.col("y2"), F.col("x2")).alias(
             "dist_m"
         ),
     ).join(factors, "path_id", "left")
@@ -374,8 +374,8 @@ def _snap(
     j = c.join(
         s, (c["path_id"] == s["_sp"]) & (c["seg_idx"] == s["_si"]), "inner"
     )
-    d1 = _haversine_col(F.col("proj_lat"), F.col("proj_lng"), F.col("y1"), F.col("x1"))
-    d2 = _haversine_col(F.col("proj_lat"), F.col("proj_lng"), F.col("y2"), F.col("x2"))
+    d1 = haversine_col(F.col("proj_lat"), F.col("proj_lng"), F.col("y1"), F.col("x1"))
+    d2 = haversine_col(F.col("proj_lat"), F.col("proj_lng"), F.col("y2"), F.col("x2"))
     projected = j.select(
         F.col("_fid").alias("feature_id"),
         F.when(d1 <= d2, F.col("src")).otherwise(F.col("dst")).alias("node"),
@@ -670,7 +670,6 @@ def _fn_ll(env, lat, lng):
 
 def _fn_distance_meters(env, a, b):
     from .evaluate import ColVal
-    from ..operators.gridjoin import haversine_col
 
     def latlng(v):
         """(lat, lng) column pair for a point-valued argument."""

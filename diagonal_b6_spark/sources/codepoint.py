@@ -71,18 +71,6 @@ def uk_ons_id_col(code, year: int = 2011) -> "F.Column":
     return F.when(valid, v)
 
 
-def uk_ons_code_col(value) -> "F.Column":
-    """UKONSCodeFromFeatureID (ids.go:85-92): (code, year) back out of
-    the packed value."""
-    v = F.col(value) if isinstance(value, str) else value
-    letter = F.char(F.shiftright(v, 40).bitwiseAND(F.lit(0xFF)))
-    year = (F.shiftright(v, 32).bitwiseAND(F.lit(0xFF)) + 1900).cast("int")
-    number = F.lpad((v.bitwiseAND(F.lit(0xFFFFFFFF))).cast("string"), 8, "0")
-    return F.struct(
-        F.concat(letter, number).alias("code"), year.alias("year")
-    )
-
-
 def postcode_id_col(norm) -> "F.Column":
     """PointIDFromGBPostcode's packed id (ids.go:21-39): 6 bits per
     char (0-9 -> 0..9, A-Z -> 10..35), then two length bits."""

@@ -14,7 +14,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from diagonal_b6_spark.operators import change as change_ops
-from diagonal_b6_spark.operators.knn import _haversine_col
+from diagonal_b6_spark.operators.gridjoin import haversine_col
 from diagonal_b6_spark.sources import osm as osm_src
 
 NODES = [
@@ -50,7 +50,7 @@ def _cap_paths(feats, lat, lng, radius_m):
         "feature_id", F.explode(F.arrays_zip("xs", "ys")).alias("v")
     ).select("feature_id", F.col("v.ys").alias("la"), F.col("v.xs").alias("lo"))
     near = v.filter(
-        _haversine_col(F.col("la"), F.col("lo"), F.lit(lat), F.lit(lng)) <= radius_m
+        haversine_col(F.col("la"), F.col("lo"), F.lit(lat), F.lit(lng)) <= radius_m
     )
     return feats.filter(F.col("feature_type") == "path").join(
         F.broadcast(near.select("feature_id").distinct()), "feature_id", "semi"

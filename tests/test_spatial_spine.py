@@ -124,6 +124,45 @@ def test_tile_assignments_match_oracle(spark, images, images_pd):
             assert sub.loc[img, "tile_y"] == yt[k]
 
 
+def test_run_flagship_one_counter_path(spark, tmp_path):
+    """Both strategies, with and without a checkpoint, return the same
+    counters; the tile checksum is the sum over tile_assignments and the
+    containment and kNN counters match numpy oracles."""
+    from pyspark.sql import functions as F
+
+    from diagonal_b6_spark.pipeline import poi_list, run_flagship
+
+    n = 2000
+    runs = {
+        (strategy, ckpt): run_flagship(
+            spark,
+            n,
+            checkpoint_root=str(tmp_path / strategy) if ckpt else None,
+            strategy=strategy,
+        )
+        for strategy in ("broadcast", "bucketed")
+        for ckpt in (False, True)
+    }
+    want = runs[("bucketed", False)]
+    for key, got in runs.items():
+        assert got == want, key
+    assert want["tile_checksum"] is not None
+    assert want["images"] == n and want["tile_rows"] == 2 * n
+
+    images = fixtures.images_table(spark, n)
+    tile_ck = tile_assignments(images, zooms=(12, 16)).agg(
+        F.sum(F.col("tile_x") + F.col("tile_y"))
+    ).collect()[0][0]
+    assert want["tile_checksum"] == tile_ck
+
+    pdf = images.select("image_id", "lat", "lng").toPandas()
+    pairs = brute_force_containment(pdf, fixtures.feature_rows())
+    assert want["containment_pairs"] == len(pairs) > 0
+    lat, lng = pdf["lat"].to_numpy(), pdf["lng"].to_numpy()
+    dist = np.min([geom.haversine_m(lat, lng, plat, plng) for _, plat, plng in poi_list(spark)], axis=0)
+    assert want["knn_checksum"] == pytest.approx(np.round(dist, 3).sum(), abs=0.2)
+
+
 def test_antimeridian_containment(spark, feats):
     probe = spark.createDataFrame(
         [("p_east", 0.0, 179.9995), ("p_west", 0.0, -179.9995), ("p_out", 0.0, 178.0)],

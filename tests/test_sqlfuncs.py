@@ -77,14 +77,14 @@ def test_geo_functions_equal_operator_twins(spark, registered):
         "SELECT event_id, b6_haversine_m(51.5355, -0.1245, lat, lng) AS d, "
         "b6_tile_x(lng, 14) AS tx, b6_tile_y(lat, 14) AS ty FROM _sqlf_ev"
     ).collect()
-    from diagonal_b6_spark.operators import knn as knn_ops
+    from diagonal_b6_spark.operators.gridjoin import haversine_col
 
     tx, ty = cover_ops.tile_xy_cols(14)
     want = {
         r["event_id"]: r
         for r in ev.select(
             "event_id",
-            knn_ops._haversine_col(
+            haversine_col(
                 F.lit(51.5355), F.lit(-0.1245), F.col("lat"), F.col("lng")
             ).alias("d"),
             tx.alias("tx"),
