@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..kernels import cellmath as cm
-from ..kernels import geom
 
 
 @F.pandas_udf(T.LongType())
@@ -31,14 +30,16 @@ def cell16_udf(lat: pd.Series, lng: pd.Series) -> pd.Series:
     return pd.Series(cm.id_to_signed(ids))
 
 
-# Catalyst duplicates deterministic Python UDFs referenced through both a
-# join key and a join condition (two ArrowEvalPython nodes = 2x Arrow
-# transfers + 2x kernel work on the 10^12-row side).  The function IS
-# deterministic; the nondeterministic marker is an evaluate-exactly-once
-# barrier -- but Catalyst refuses nondeterministic expressions outside
-# Project/Filter/Aggregate/Window, so the marked variant is SCOPED to
-# `with_point_cells` (a Project) and the plain deterministic UDF stays
-# available for join conditions / sorts.
+# Every join or range filter on `cell16`/`bucket` makes Catalyst infer an
+# `isnotnull` (or range) filter and push it below the Project that defines
+# the column, which re-evaluates a deterministic Python UDF there: two
+# ArrowEvalPython nodes, 2x Arrow transfers and 2x kernel work on the
+# 10^12-row side (still so on Spark 4.1.2, in both containment builders
+# and distance_join).  The function IS deterministic; the nondeterministic
+# marker is an evaluate-exactly-once barrier -- but Catalyst refuses
+# nondeterministic expressions outside Project/Filter/Aggregate/Window, so
+# the marked variant is SCOPED to `with_point_cells` (a Project) and the
+# plain deterministic UDF stays available for join conditions / sorts.
 cell16_once_udf = cell16_udf.asNondeterministic()
 
 
@@ -62,30 +63,12 @@ def with_point_cells(df: DataFrame, lat: str = "lat", lng: str = "lng") -> DataF
     )
 
 
-def _cover_one(xs: np.ndarray, ys: np.ndarray, ftype: str, max_cells: int, max_level: int):
+def covering_cells(xs: np.ndarray, ys: np.ndarray, ftype: str, max_cells: int, max_level: int):
+    """A feature's covering cells: its point's cell at `max_level` for a
+    point (or a one-vertex geometry), else the ring covering."""
     if ftype == "point" or len(xs) == 1:
-        cells = cm.cell_id_from_latlng(ys[:1], xs[:1], max_level)
-    else:
-        cells = cm.covering_ring(xs, ys, max_cells=max_cells, max_level=max_level)
-    rmin = cm.id_to_signed(cm.range_min(cells))
-    rmax = cm.id_to_signed(cm.range_max(cells))
-    lvl = cm.level(cells)
-    signed = cm.id_to_signed(cells)
-    out = []
-    for k in range(len(cells)):
-        # BUCKET_LEVEL equi-keys precomputed here so the join builders
-        # need no second Arrow stage over the cover index
-        b, _ = cm.expand_to_bucket_level(cells[k : k + 1], cm.BUCKET_LEVEL)
-        out.append(
-            {
-                "cell": int(signed[k]),
-                "rmin": int(rmin[k]),
-                "rmax": int(rmax[k]),
-                "level": int(lvl[k]),
-                "buckets": [int(v) for v in cm.id_to_signed(b)],
-            }
-        )
-    return out
+        return cm.cell_id_from_latlng(ys[:1], xs[:1], max_level)
+    return cm.covering_ring(xs, ys, max_cells=max_cells, max_level=max_level)
 
 
 # the feature columns the cover pass reads and carries onto every cover row,
@@ -125,13 +108,22 @@ def feature_cover_index(
         for pdf in batches:
             rows = []
             for f in pdf.itertuples(index=False):
-                cells = _cover_one(
+                cells = covering_cells(
                     np.asarray(f.xs), np.asarray(f.ys), f.feature_type, max_cells, max_level
                 )
-                for c in cells:
+                # one kernel call per feature; orig_index maps each bucket
+                # key back to its cell (a covering has <= max_cells cells)
+                buckets, idx = cm.expand_to_bucket_level(cells, cm.BUCKET_LEVEL)
+                buckets = cm.id_to_signed(buckets)
+                for k, (c, lo, hi, lvl) in enumerate(zip(
+                    cm.id_to_signed(cells).tolist(),
+                    cm.id_to_signed(cm.range_min(cells)).tolist(),
+                    cm.id_to_signed(cm.range_max(cells)).tolist(),
+                    cm.level(cells).tolist(),
+                )):
                     rows.append(
                         (f.feature_id, f.feature_type, f.xs, f.ys, f.ring_offsets,
-                         c["cell"], c["rmin"], c["rmax"], c["level"], c["buckets"])
+                         c, lo, hi, lvl, buckets[idx == k].tolist())
                     )
             if rows:
                 yield pd.DataFrame(rows, columns=columns)

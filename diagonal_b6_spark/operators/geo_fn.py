@@ -29,6 +29,7 @@ from pyspark.sql import types as T
 
 from ..kernels import cellmath as cm
 from ..kernels import geom
+from .cover import covering_cells
 
 
 # --- per-feature scalar accessors -------------------------------------------
@@ -336,22 +337,6 @@ _TOKEN_COVER_SCHEMA = T.ArrayType(
 )
 
 
-def _cover_cells(ftype: str, x: np.ndarray, y: np.ndarray, max_cells: int, max_level: int, fixed_level: int | None):
-    if fixed_level is not None:
-        if ftype == "point" or len(x) == 1:
-            cells = cm.cell_id_from_latlng(y[:1], x[:1], fixed_level)
-        else:
-            cells = cm.covering_ring(x, y, max_cells=1 << 30, max_level=fixed_level)
-            cells = np.unique(
-                cm.parent(cells, np.minimum(cm.level(cells), fixed_level))
-            )
-    elif ftype == "point" or len(x) == 1:
-        cells = cm.cell_id_from_latlng(y[:1], x[:1], max_level)
-    else:
-        cells = cm.covering_ring(x, y, max_cells=max_cells, max_level=max_level)
-    return cells
-
-
 def s2_covering(
     features: DataFrame,
     max_cells: int = cm.MAX_COVERING_CELLS,
@@ -370,7 +355,11 @@ def s2_covering(
         for t, x, y in zip(ftype, xs, ys):
             x = np.asarray(x, dtype=np.float64)
             y = np.asarray(y, dtype=np.float64)
-            cells = _cover_cells(t, x, y, max_cells, max_level, fixed_level)
+            if fixed_level is None:
+                cells = covering_cells(x, y, t, max_cells, max_level)
+            else:  # s2-grid: the uncapped covering, coarsened to fixed_level
+                cells = covering_cells(x, y, t, 1 << 30, fixed_level)
+                cells = np.unique(cm.parent(cells, np.minimum(cm.level(cells), fixed_level)))
             toks = cm.token(cells)
             lat, lng = cm.cell_center_latlng(cells)
             lvl = cm.level(cells)

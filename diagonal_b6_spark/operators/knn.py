@@ -117,17 +117,11 @@ def knn_grid(
     gy = F.floor(F.col("lat") / cell_deg).cast("long")
     pts = points.withColumn("gx", gx).withColumn("gy", gy)
     pr = probes.withColumn("gx", gx).withColumn("gy", gy)
-    # the (2r+1)^2 cell offsets as JVM column math over a range (a list of
-    # rows would plan as a pickled Python RDD scanned by a Python worker)
-    side = 2 * max_rings + 1
-    off_df = F.broadcast(
-        pr.sparkSession.range(side * side).select(
-            (F.floor(F.col("id") / side) - max_rings).cast("long").alias("dx"),
-            (F.col("id") % side - max_rings).alias("dy"),
-        )
-    )
+    # the (2r+1)^2 neighbor cells as two JVM explodes on the probe rows
+    ring = F.explode(F.sequence(F.lit(-max_rings), F.lit(max_rings)).cast("array<long>"))
     cand = (
-        pr.crossJoin(off_df)
+        pr.withColumn("dx", ring)
+        .withColumn("dy", ring)
         .withColumn("ngx", F.col("gx") + F.col("dx"))
         .withColumn("ngy", F.col("gy") + F.col("dy"))
         .alias("pr")

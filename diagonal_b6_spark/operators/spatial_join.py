@@ -12,12 +12,15 @@ Spark-first re-expression:
           builders explode in the JVM -- no Python UDF on the polygon side.
   stage 1 (filter): join the point table against the polygon cover index
           on cell containment (point.cell16 within cover-cell range).
-          * broadcast path: polygon cover index is small -> broadcast
-            hash join on the bucket key + range filter (no shuffle of the
-            big point side).
-          * bucketed path: both sides keyed by the level-BUCKET_LEVEL
-            ancestor -> co-partitioned equi-join + range filter; an
-            optional salt column splits dense buckets across reducers
+          One builder body serves both public builders; they differ
+          only in `salt`:
+          * broadcast path (salt 1): the cover rows are broadcast ->
+            hash join on the bucket key + range filter (no shuffle of
+            the big point side).
+          * bucketed path (salt > 1): each cover row is copied `salt`
+            times by a second explode (no cross join), points hash their
+            id to a salt, and the co-partitioned equi-join on
+            (bucket, salt) splits dense buckets across reducers
             (explicit skew handling per the north rule; AQE skew-join
             stays on as the runtime backstop).
   stage 2 (refine): winding-number/even-odd PIP over packed coordinate
@@ -37,6 +40,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..kernels import cellmath as cm
 from ..kernels import geom
 from . import cover as cover_ops
 
@@ -83,13 +87,44 @@ def _refine_pip(
     )
 
 
-def _area_bucket_rows(polygons: DataFrame) -> DataFrame:
-    """The polygon side of both containment plans: the areas' cover rows,
-    one per (cover cell, BUCKET_LEVEL key), each with its cell's range
-    and the polygon's geometry.  The cover pass attaches the keys, so
-    exploding them here is JVM work."""
+def _containment_join(
+    points: DataFrame,
+    polygons: DataFrame,
+    point_id: str,
+    lat: str,
+    lng: str,
+    extras: list[str],
+    salt: int,
+) -> DataFrame:
+    """The one containment builder body.  Points get their cells unless
+    they carry `cell16`; the areas are covered once and their cover rows
+    exploded to BUCKET_LEVEL keys in the JVM (the cover pass attaches
+    the keys); candidates range-filter on the cover cell, then refine.
+
+    salt == 1: the cover rows are broadcast and the join plans as a
+    broadcast HASH join on `bucket` (round 1 used the raw range
+    condition, which planned as BroadcastNestedLoopJoin -- every point
+    row scanned every cover row).  salt > 1: each cover row is copied
+    once per salt value by a second explode, points take
+    pmod(xxhash64(point_id), salt) as their salt, and the equi-join on
+    (bucket, salt_id) spreads a dense bucket over `salt` reducers.
+    A point matches at most one cover row per polygon (cover cells are
+    disjoint, and each point meets one salt copy), so no dedup is
+    needed."""
+    if salt < 1:
+        raise ValueError(f"containment join salt must be >= 1, got {salt}")
+    if "cell16" not in points.columns:
+        points = cover_ops.with_point_cells(points, lat, lng)
     cov = cover_ops.feature_cover_index(polygons.filter(F.col("feature_type") == "area"))
-    return cov.select(*_GEOM_COLS, "rmin", "rmax", F.explode("buckets").alias("bucket"))
+    rows = cov.select(*_GEOM_COLS, "rmin", "rmax", F.explode("buckets").alias("bucket"))
+    if salt == 1:
+        cand = points.join(F.broadcast(rows), "bucket")
+    else:
+        salted = rows.withColumn("salt_id", F.explode(F.sequence(F.lit(0), F.lit(salt - 1))))
+        pts = points.withColumn("salt_id", F.pmod(F.xxhash64(point_id), F.lit(salt)).cast("int"))
+        cand = pts.join(salted, ["bucket", "salt_id"])
+    cand = cand.filter((F.col("cell16") >= F.col("rmin")) & (F.col("cell16") <= F.col("rmax")))
+    return _refine_pip(cand, point_id, lat, lng, extras)
 
 
 def containment_join_broadcast(
@@ -102,42 +137,9 @@ def containment_join_broadcast(
 ) -> DataFrame:
     """PIP containment join, polygon side broadcast (the `containing-areas`
     shape: N huge points x M small areas).  Returns (point_id, lat, lng,
-    feature_id) rows -- one per containment pair.
-
-    The broadcast side is exploded to BUCKET_LEVEL equi-keys so the join
-    plans as a broadcast HASH join on `bucket` (round 1 used the raw
-    range condition, which planned as BroadcastNestedLoopJoin -- every
-    point row scanned every cover row).  The range filter then prunes
-    within the matched bucket.  A point matches at most one cover row
-    per polygon (cover cells are disjoint), so no dedup is needed."""
-    if "cell16" not in points.columns:
-        points = cover_ops.with_point_cells(points, lat, lng)
-    buckets = _area_bucket_rows(polygons)
-    cand = points.join(F.broadcast(buckets), "bucket").filter(
-        (F.col("cell16") >= F.col("rmin")) & (F.col("cell16") <= F.col("rmax"))
-    )
-    return _refine_pip(cand, point_id, lat, lng, extras or [])
-
-
-def containment_join(
-    points: DataFrame,
-    polygons: DataFrame,
-    point_id: str = "image_id",
-    lat: str = "lat",
-    lng: str = "lng",
-    max_broadcast_features: int = 100_000,
-    salt: int = 8,
-) -> DataFrame:
-    """Auto-switching containment join: broadcast-hash when the polygon
-    side is small enough to ship to every executor, salted bucketed
-    co-partition join otherwise.  The switch costs one cheap
-    `limit(n+1).count()` action on the (already-filtered) polygon side --
-    the same kind of size probe AQE itself uses."""
-    areas = polygons.filter(F.col("feature_type") == "area")
-    n = areas.limit(max_broadcast_features + 1).count()
-    if n <= max_broadcast_features:
-        return containment_join_broadcast(points, polygons, point_id, lat, lng)
-    return containment_join_bucketed(points, polygons, point_id, lat, lng, salt)
+    feature_id) rows -- one per containment pair -- plus any `extras`
+    point columns, passed through the refine untouched."""
+    return _containment_join(points, polygons, point_id, lat, lng, extras or [], 1)
 
 
 def containment_join_bucketed(
@@ -149,35 +151,11 @@ def containment_join_bucketed(
     salt: int = 8,
 ) -> DataFrame:
     """PIP containment join for the large-large case: co-partitioned
-    equi-join on the BUCKET_LEVEL cell ancestor, polygon cover cells
-    exploded/normalized to bucket keys, point side salted so a dense
-    bucket (the fixture's 250 m disk; a city-centre cell at 10^12 scale)
-    spreads over `salt` reducers.
-
-    Polygon-side rows replicate `salt` times (small side); point-side salt
-    is derived from a hash of the point id, so the join key is
-    (bucket, salt_id) -- explicit skew splitting per the north rule.
-    """
-    if "cell16" not in points.columns:
-        points = cover_ops.with_point_cells(points, lat, lng)
-    salted = _area_bucket_rows(polygons).crossJoin(
-        F.broadcast(_salt_range(points.sparkSession, salt))
-    )
-    pts = points.withColumn("salt_id", F.pmod(F.xxhash64(F.col(point_id)), F.lit(salt)))
-    cand = pts.join(
-        salted,
-        (pts["bucket"] == salted["bucket"]) & (pts["salt_id"] == salted["salt_id"]),
-        "inner",
-    ).filter((F.col("cell16") >= F.col("rmin")) & (F.col("cell16") <= F.col("rmax")))
-    return _refine_pip(cand, point_id, lat, lng, [])
-
-
-def _salt_range(spark, salt: int) -> DataFrame:
-    return spark.range(salt).select(F.col("id").cast("int").alias("salt_id"))
-
-
-from pyspark.sql import types as T  # noqa: E402
-from ..kernels import cellmath as cm  # noqa: E402
+    equi-join on (BUCKET_LEVEL cell ancestor, salt), so a dense bucket
+    (the fixture's 250 m disk; a city-centre cell at 10^12 scale)
+    spreads over `salt` reducers -- explicit skew splitting per the
+    north rule.  salt=1 is the broadcast plan."""
+    return _containment_join(points, polygons, point_id, lat, lng, [], salt)
 
 
 def segment_intersections(

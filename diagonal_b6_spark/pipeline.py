@@ -173,6 +173,8 @@ def containment_pipeline(
     """images x areas containment pairs (the BASELINE.json join).  The
     join builders add the point cells unless `images` already carries
     `cell16`."""
+    if strategy not in ("broadcast", "bucketed"):
+        raise ValueError(f"strategy must be 'broadcast' or 'bucketed', got {strategy!r}")
     feats = features if features is not None else fixtures.features_table(spark)
     if strategy == "broadcast":
         return spatial_join.containment_join_broadcast(images, feats)

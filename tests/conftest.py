@@ -10,6 +10,6 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 def spark():
     from diagonal_b6_spark.session import get_spark
 
-    s = get_spark("pytest", cores=8, shuffle_partitions=8)
+    s = get_spark("pytest", shuffle_partitions=8)
     yield s
     s.stop()

@@ -193,11 +193,13 @@ def test_knn_grid_equals_bruteforce(spark):
 
 def test_broadcast_containment_plans_hash_join(spark):
     """Round-1 range-condition broadcast planned as BroadcastNestedLoopJoin
-    (O(N*M)); the bucket-equi-key explode must plan a hash join.  Both
-    builders cover the polygon side in one Python pass: no ArrowEvalPython
-    there (only the point side's cell16_udf), exactly two MapInPandas
-    nodes (the cover pass and the refine), and a JVM-local feature scan
-    rather than a pickled Python RDD."""
+    (O(N*M)); the bucket-equi-key explode must plan a hash join, and the
+    salted builder copies its cover rows by an explode, not by a nested-
+    loop cross join.  Both builders cover the polygon side in one Python
+    pass: the point side's cell16_udf is the plan's one ArrowEvalPython
+    (evaluated once, not per reference), exactly two MapInPandas nodes
+    (the cover pass and the refine), and a JVM-local feature scan rather
+    than a pickled Python RDD."""
     from diagonal_b6_spark import fixtures
     from diagonal_b6_spark.operators import spatial_join
 
@@ -208,28 +210,42 @@ def test_broadcast_containment_plans_hash_join(spark):
         (F.lit(-0.14) + F.col("id") * 1e-4).alias("lng"),
     )
     feats = fixtures.features_table(spark)
-    # the bucketed builder replicates its cover rows over the salt range
-    # with one (tiny) nested-loop cross join; its bucket join is a hash join
-    for builder, nested_loops in (
-        (spatial_join.containment_join_broadcast, 0),
-        (spatial_join.containment_join_bucketed, 1),
+    for builder in (
+        spatial_join.containment_join_broadcast,
+        spatial_join.containment_join_bucketed,
     ):
         out = builder(pts, feats, point_id="pid")
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" in plan, builder.__name__
-        assert plan.count("BroadcastNestedLoopJoin") == nested_loops, builder.__name__
+        assert plan.count("BroadcastNestedLoopJoin") == 0, builder.__name__
         python_evals = [ln for ln in plan.splitlines() if "ArrowEvalPython" in ln]
-        assert python_evals and all("cell16_udf(" in ln for ln in python_evals), plan
+        assert len(python_evals) == 1 and "cell16_udf(" in python_evals[0], plan
         assert plan.count("MapInPandas") == 2, plan
         assert "MapInPandas cover_cells(" in plan and "MapInPandas refine(" in plan
         assert "ExistingRDD" not in plan, plan
 
 
+def test_containment_rejects_bad_salt_and_strategy(spark, images, feats):
+    """A salt below 1 or an unknown strategy raises instead of returning
+    a silently wrong (empty) pair set."""
+    from diagonal_b6_spark.pipeline import containment_pipeline
+
+    for salt in (0, -2):
+        with pytest.raises(ValueError, match="salt"):
+            spatial_join.containment_join_bucketed(images, feats, salt=salt)
+    with pytest.raises(ValueError, match="strategy"):
+        containment_pipeline(spark, images, feats, strategy="salted")
+    # salt 1 is the broadcast plan and answers the same as any salt
+    one = spatial_join.containment_join_bucketed(images, feats, salt=1)
+    assert one.count() == spatial_join.containment_join_bucketed(images, feats, salt=3).count() > 0
+
+
 def test_cover_index_matches_cover_kernel(spark):
-    """feature_cover_index emits exactly the cover kernel's rows, one per
+    """feature_cover_index emits exactly the cover kernels' rows, one per
     (feature, covering cell) in kernel order, each carrying the feature's
-    geometry.  A 12 km square is covered by cells coarser than
-    BUCKET_LEVEL, so its rows carry several bucket keys."""
+    geometry and the bucket keys of that one cell.  A 12 km square is
+    covered by cells coarser than BUCKET_LEVEL, so its rows carry several
+    bucket keys."""
     from diagonal_b6_spark.kernels import cellmath as cm
 
     xs, ys = fixtures._square(51.50, -0.12, 6000.0)
@@ -250,38 +266,35 @@ def test_cover_index_matches_cover_kernel(spark):
              "buckets": list(r.buckets)}
         )
     for f in rows:
-        want = cover_ops._cover_one(
-            np.asarray(f["xs"]), np.asarray(f["ys"]), f["feature_type"],
-            cm.MAX_COVERING_CELLS, cm.MAX_INDEX_LEVEL,
-        )
+        xs, ys = np.asarray(f["xs"]), np.asarray(f["ys"])
+        if f["feature_type"] == "point" or len(xs) == 1:
+            cells = cm.cell_id_from_latlng(ys[:1], xs[:1], cm.MAX_INDEX_LEVEL)
+        else:
+            cells = cm.covering_ring(
+                xs, ys, max_cells=cm.MAX_COVERING_CELLS, max_level=cm.MAX_INDEX_LEVEL
+            )
+        want = [
+            {
+                "cell": int(cm.id_to_signed(cell)[0]),
+                "rmin": int(cm.id_to_signed(cm.range_min(cell))[0]),
+                "rmax": int(cm.id_to_signed(cm.range_max(cell))[0]),
+                "level": int(cm.level(cell)[0]),
+                "buckets": cm.id_to_signed(
+                    cm.expand_to_bucket_level(cell, cm.BUCKET_LEVEL)[0]
+                ).tolist(),
+            }
+            for cell in (cells[k : k + 1] for k in range(len(cells)))
+        ]
         assert got[f["feature_id"]] == want, f["feature_id"]
     big_rows = got["area/test/big"]
     assert min(c["level"] for c in big_rows) < cm.BUCKET_LEVEL
     assert max(len(c["buckets"]) for c in big_rows) > 1
 
 
-def test_containment_auto_switch(spark):
-    """Small polygon side -> broadcast plan; tiny threshold -> bucketed."""
-    from diagonal_b6_spark import fixtures
-    from diagonal_b6_spark.operators import spatial_join
-    from pyspark.sql import functions as F
-
-    pts = spark.range(50).select(
-        F.col("id").alias("pid"),
-        (F.lit(51.52) + F.col("id") * 1e-4).alias("lat"),
-        (F.lit(-0.14) + F.col("id") * 1e-4).alias("lng"),
-    )
-    feats = fixtures.features_table(spark)
-    bcast = spatial_join.containment_join(pts, feats, point_id="pid")
-    bucketed = spatial_join.containment_join(pts, feats, point_id="pid", max_broadcast_features=1)
-    a = sorted((r["pid"], r["feature_id"]) for r in bcast.collect())
-    b = sorted((r["pid"], r["feature_id"]) for r in bucketed.collect())
-    assert a == b
-
-
 def test_knn_grid_construction_is_lazy(spark):
     """Single-job knn_grid: no driver-side ring loop, so building the
-    DataFrame launches zero jobs (round 1 ran isEmpty per ring)."""
+    DataFrame launches zero jobs (round 1 ran isEmpty per ring), and no
+    nested-loop join replicates the probes over the ring offsets."""
     import time
     from diagonal_b6_spark.operators import knn
     from pyspark.sql import functions as F
@@ -302,6 +315,10 @@ def test_knn_grid_construction_is_lazy(spark):
     time.sleep(0.2)
     after = len(tracker.getJobIdsForGroup(None) or [])
     assert after == before
+    # the ring offsets are two explodes on the probe rows, not a cross join
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastNestedLoopJoin" not in plan and "CartesianProduct" not in plan, plan
+    assert plan.count("Generate explode") == 2, plan
     assert df.count() > 0
 
 
