@@ -299,42 +299,34 @@ def cell_id_from_latlng(lat_deg, lng_deg, lvl=MAX_LEVEL):
     return parent(leaf, np.int64(lvl))
 
 
-def cell_center_latlng(cell_id):
-    """Center lat/lng of cells (center of the ij bounds at the cell level)."""
+# fractional (di, dj) offsets inside a cell's ij square: its center, then
+# its corners 00, 10, 11, 01 (the probe order sql_cellmath replays)
+_PROBES = np.array([[0.5, 0.5], [0.0, 0.0], [1.0, 0.0], [1.0, 1.0], [0.0, 1.0]])
+
+
+def _cell_probes_xyz(cell_id, probes):
+    """Unit xyz of each probe offset of each cell -> (x, y, z), each
+    [n_cells, n_probes].  Decodes every cell once."""
     cid = np.atleast_1d(np.asarray(cell_id)).astype(np.uint64)
-    lvl = level(cid)
     face, i, j = id_to_face_ij(cid)
     # decoded leaf is the Hilbert-first leaf, not the ij-min corner: mask to grid
-    shift = _U64(MAX_LEVEL) - lvl.astype(np.uint64)
-    i = (i >> shift) << shift
-    j = (j >> shift) << shift
-    size = (_ONE << shift).astype(np.float64)
-    si = (i.astype(np.float64) + 0.5 * size) / float(1 << MAX_LEVEL)
-    sj = (j.astype(np.float64) + 0.5 * size) / float(1 << MAX_LEVEL)
-    x, y, z = face_uv_to_xyz(face, st_to_uv(si), st_to_uv(sj))
-    return xyz_to_latlng(x, y, z)
+    shift = _U64(MAX_LEVEL) - level(cid).astype(np.uint64)
+    size = (_ONE << shift).astype(np.float64)[:, None]
+    scale = float(1 << MAX_LEVEL)
+    s = (((i >> shift) << shift).astype(np.float64)[:, None] + probes[:, 0] * size) / scale
+    t = (((j >> shift) << shift).astype(np.float64)[:, None] + probes[:, 1] * size) / scale
+    return face_uv_to_xyz(np.broadcast_to(face[:, None], s.shape), st_to_uv(s), st_to_uv(t))
+
+
+def cell_center_latlng(cell_id):
+    """Center lat/lng of cells (center of the ij bounds at the cell level)."""
+    x, y, z = _cell_probes_xyz(cell_id, _PROBES[:1])
+    return xyz_to_latlng(x[:, 0], y[:, 0], z[:, 0])
 
 
 def cell_corners_latlng(cell_id):
     """4 corner lat/lngs per cell -> (lat[n,4], lng[n,4])."""
-    cid = np.atleast_1d(np.asarray(cell_id)).astype(np.uint64)
-    lvl = level(cid)
-    face, i, j = id_to_face_ij(cid)
-    shift = _U64(MAX_LEVEL) - lvl.astype(np.uint64)
-    i = (i >> shift) << shift
-    j = (j >> shift) << shift
-    size = (_ONE << shift).astype(np.float64)
-    i0 = i.astype(np.float64)
-    j0 = j.astype(np.float64)
-    lats = np.empty((cid.shape[0], 4))
-    lngs = np.empty((cid.shape[0], 4))
-    scale = float(1 << MAX_LEVEL)
-    for c, (di, dj) in enumerate([(0, 0), (1, 0), (1, 1), (0, 1)]):
-        s = (i0 + di * size) / scale
-        t = (j0 + dj * size) / scale
-        x, y, z = face_uv_to_xyz(face, st_to_uv(s), st_to_uv(t))
-        lats[:, c], lngs[:, c] = xyz_to_latlng(x, y, z)
-    return lats, lngs
+    return xyz_to_latlng(*_cell_probes_xyz(cell_id, _PROBES[1:]))
 
 
 def token(cell_id):
@@ -399,16 +391,23 @@ def _angle_between(x0, y0, z0, x1, y1, z1):
     return np.arccos(dot)
 
 
-def _cell_circumangle(cell_id):
-    """Max angle from cell center to its corners (per cell)."""
-    clat, clng = cell_center_latlng(cell_id)
-    cx, cy, cz = latlng_to_xyz(clat, clng)
-    lats, lngs = cell_corners_latlng(cell_id)
-    best = np.zeros(np.atleast_1d(cell_id).shape[0])
-    for c in range(4):
-        x, y, z = latlng_to_xyz(lats[:, c], lngs[:, c])
-        best = np.maximum(best, _angle_between(cx, cy, cz, x, y, z))
-    return best
+def _cap_cell_test(cells, cap_xyz, cap_rad):
+    """The covering's one float decision: a cell may intersect the cap
+    (center `cap_xyz`, angular radius `cap_rad`) iff angle <= threshold,
+    where angle runs from the cap center to the cell center and
+    threshold = cap_rad + the cell's circumangle (center to farthest
+    corner) + 1e-12.  Conservative: it never drops an intersecting cell.
+    Center and corners are built straight in xyz from one decode per
+    cell, the same five probes sql_cellmath replays.  Returns
+    (angle, threshold) arrays."""
+    x, y, z = _cell_probes_xyz(cells, _PROBES)
+    angle = _angle_between(*cap_xyz, x[:, 0], y[:, 0], z[:, 0])
+    circum = _angle_between(x[:, :1], y[:, :1], z[:, :1], x[:, 1:], y[:, 1:], z[:, 1:])
+    return angle, cap_rad + circum.max(axis=1) + 1e-12
+
+
+# the 6 level-0 cells, where every covering starts
+_FACE_CELLS = (np.arange(6, dtype=np.uint64) << _U64(POS_BITS)) | _U64(1 << (POS_BITS - 1))
 
 
 def covering_cap(
@@ -421,22 +420,19 @@ def covering_cap(
     """Deterministic covering of a spherical cap.
 
     Greedy refinement: start from the 6 face cells, repeatedly split the
-    lowest-level candidate that may intersect the cap while the budget
-    allows.  Conservative (superset) intersection tests via circumangle.
-    Returns a sorted uint64 array of cell ids (mixed levels).
+    lowest-level (then smallest-id) candidate while the budget allows,
+    keeping the children that pass _cap_cell_test, a conservative
+    (superset) test.  Returns a sorted uint64 array of cell ids (mixed
+    levels).
     """
-    cx, cy, cz = latlng_to_xyz(np.array([center_lat]), np.array([center_lng]))
+    cap_xyz = latlng_to_xyz(center_lat, center_lng)
     cap_rad = _cap_angle_rad(radius_m)
 
     def may_intersect(cells):
-        lat, lng = cell_center_latlng(cells)
-        x, y, z = latlng_to_xyz(lat, lng)
-        ang = _angle_between(cx[0], cy[0], cz[0], x, y, z)
-        return ang <= cap_rad + _cell_circumangle(cells) + 1e-12
+        angle, threshold = _cap_cell_test(cells, cap_xyz, cap_rad)
+        return angle <= threshold
 
-    faces = face_ij_to_id(np.arange(6), np.zeros(6, dtype=np.uint64), np.zeros(6, dtype=np.uint64))
-    faces = parent(faces, np.int64(0))
-    cand = faces[may_intersect(faces)]
+    cand = _FACE_CELLS[may_intersect(_FACE_CELLS)]
     while True:
         lvls = level(cand)
         splittable = np.where(lvls < max_level)[0]
@@ -450,7 +446,7 @@ def covering_cap(
         if cand.size - 1 + kids.size > max_cells and cand.size > 1:
             break
         cand = np.sort(np.concatenate([np.delete(cand, pick), kids]))
-        if cand.size >= max_cells and level(cand).min() >= 0 and (level(cand) >= max_level).all():
+        if cand.size >= max_cells and (level(cand) >= max_level).all():
             break
     return np.sort(cand)
 

@@ -100,27 +100,10 @@ def haversine_a_to_m(a):
     return 2 * F.lit(EARTH_RADIUS_M) * F.asin(F.sqrt(F.least(a, F.lit(1.0))))
 
 
-def point_segment_t_col(px, py, x1, y1, x2, y2):
-    """Clamped projection parameter t of the point onto the segment, in
-    the same local frame as point_segment_dist_col (the projected point
-    is then p1 + t*(p2-p1) in lat/lng)."""
-    kx = F.cos(F.radians(py)) * F.lit(M_PER_DEG)
-    ky = F.lit(M_PER_DEG)
-    ax = (F.pmod(x1 - px + F.lit(180.0), F.lit(360.0)) - F.lit(180.0)) * kx
-    bx = (F.pmod(x2 - px + F.lit(180.0), F.lit(360.0)) - F.lit(180.0)) * kx
-    ay = (y1 - py) * ky
-    by = (y2 - py) * ky
-    dx, dy = bx - ax, by - ay
-    seg2 = dx * dx + dy * dy
-    t_raw = F.when(seg2 > 0, -(ax * dx + ay * dy) / seg2).otherwise(F.lit(0.0))
-    return F.greatest(F.lit(0.0), F.least(F.lit(1.0), t_raw))
-
-
-def point_segment_dist_col(px, py, x1, y1, x2, y2):
-    """Point->segment distance in meters as pure column expressions --
-    the same local-equirectangular formula as
-    kernels/geom.point_segment_distance_m, kept JVM-side so candidate
-    refinement never crosses into Python."""
+def _point_segment_frame(px, py, x1, y1, x2, y2):
+    """The segment in a local-equirectangular meter frame centred on the
+    point, and the clamped projection parameter t of the point onto it
+    -> (ax, ay, dx, dy, t), with p1 at (ax, ay) and p2 - p1 = (dx, dy)."""
     kx = F.cos(F.radians(py)) * F.lit(M_PER_DEG)
     ky = F.lit(M_PER_DEG)
     # antimeridian-safe normalized longitude differences
@@ -131,7 +114,22 @@ def point_segment_dist_col(px, py, x1, y1, x2, y2):
     dx, dy = bx - ax, by - ay
     seg2 = dx * dx + dy * dy
     t_raw = F.when(seg2 > 0, -(ax * dx + ay * dy) / seg2).otherwise(F.lit(0.0))
-    t = F.greatest(F.lit(0.0), F.least(F.lit(1.0), t_raw))
+    return ax, ay, dx, dy, F.greatest(F.lit(0.0), F.least(F.lit(1.0), t_raw))
+
+
+def point_segment_t_col(px, py, x1, y1, x2, y2):
+    """Clamped projection parameter t of the point onto the segment, in
+    the same local frame as point_segment_dist_col (the projected point
+    is then p1 + t*(p2-p1) in lat/lng)."""
+    return _point_segment_frame(px, py, x1, y1, x2, y2)[4]
+
+
+def point_segment_dist_col(px, py, x1, y1, x2, y2):
+    """Point->segment distance in meters as pure column expressions --
+    the same local-equirectangular formula as
+    kernels/geom.point_segment_distance_m, kept JVM-side so candidate
+    refinement never crosses into Python."""
+    ax, ay, dx, dy, t = _point_segment_frame(px, py, x1, y1, x2, y2)
     cx = ax + t * dx
     cy = ay + t * dy
     return F.sqrt(cx * cx + cy * cy)

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .gridjoin import haversine_a_col, haversine_a_to_m, haversine_col
+from .gridjoin import haversine_a_col, haversine_a_to_m, haversine_col, probe_cells
 
 
 def knn_bruteforce(
@@ -113,10 +113,8 @@ def knn_grid(
     accepted best-effort at the cap, which IS top-k over the square.
     Mirrors the reference's bounded-budget search (fn graph.go:409-412).
     """
-    gx = F.floor(F.col("lng") / cell_deg).cast("long")
-    gy = F.floor(F.col("lat") / cell_deg).cast("long")
-    pts = points.withColumn("gx", gx).withColumn("gy", gy)
-    pr = probes.withColumn("gx", gx).withColumn("gy", gy)
+    pts = probe_cells(points, cell_deg)
+    pr = probe_cells(probes, cell_deg)
     # the (2r+1)^2 neighbor cells as two JVM explodes on the probe rows
     ring = F.explode(F.sequence(F.lit(-max_rings), F.lit(max_rings)).cast("array<long>"))
     cand = (

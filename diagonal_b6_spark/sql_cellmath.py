@@ -31,13 +31,17 @@ the ENTIRE covering independently in SQL:
 Float fidelity: every discrete decision the kernel makes (floor of
 s*2^30 for points, `ang <= cap_rad + circumangle + 1e-12` for rings,
 the budget comparisons) is replayed on IEEE doubles in both engines.
-numpy and DuckDB libm results can differ by ~1 ulp, and this replay
-skips the kernel's per-probe xyz->latlng->xyz roundtrip (error ~1e-16
-rad), so correctness rests on the fixture's decision margins being far
-above that noise: measured minima are 4.2e-3 leaf-ij units (points,
-vs ~1e-6 units of trig noise) and 3.3e-7 rad (rings, vs ~1e-12 rad of
-combined noise).  tests/test_sql_cellmath.py pins both margins and the
-bit-exact SQL==kernel equality for the whole fixture set.
+The ring test evaluates the same five xyz probes with the same
+expressions as the kernel's _cap_cell_test, but numpy and DuckDB libm
+results can differ by ~1 ulp, so correctness rests on the decision
+margins being far above that noise.  Measured minima over the fixture
+set: 4.2e-3 leaf-ij units (points, vs ~1e-6 units of trig noise) and
+3.3e-7 rad (rings, vs ~1e-12 rad).  The events corpus points sit much
+closer to their floors (6.2e-4 at sf0.001, 1.3e-5 at sf0.01, 3.2e-6
+at sf0.1), so a larger corpus is only safe to encode in another
+engine after its own margin check.  tests/test_sql_cellmath.py pins
+all of these margins and the bit-exact SQL==kernel equality for the
+whole fixture set.
 """
 
 from __future__ import annotations
@@ -91,7 +95,7 @@ def _xyz_of(lat: str, lng: str) -> tuple[str, str, str]:
 
 
 def _may_intersect(c: str, cx: str, cy: str, cz: str, crad: str) -> str:
-    """Conservative cap-cell test (cellmath.covering_cap.may_intersect)
+    """Conservative cap-cell test (cellmath._cap_cell_test)
     for candidate struct `c` (fields lvl, id, face, i0, j0, ori):
     angle(cap_center, cell_center) <= cap_rad + circumangle + 1e-12.
 

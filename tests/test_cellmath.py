@@ -183,3 +183,40 @@ def test_tile_assignment_reference_vector():
     x, y = geom.latlng_to_tile(lats, lngs, 18)
     assert list(x) == [130980] * 3
     assert list(y) == [87135] * 3
+
+
+# sha256 over every covering below, each as uint64 [len, ids...]; pinned
+# before the covering's cap-cell test moved from lat/lng probes to xyz
+_COVERINGS_SHA256 = "77c89a3fabf932b5fc824f9e508898d7b36aa914b9f6783710118f2ed57e8761"
+
+
+def _pinned_coverings():
+    rng = np.random.default_rng(20261019)
+    for _ in range(500):
+        lat = rng.uniform(-89.9, 89.9)
+        lng = rng.uniform(-180.0, 180.0)
+        yield cm.covering_cap(lat, lng, 10.0 ** rng.uniform(0.0, 6.3))
+    for r in range(500):
+        n = int(rng.integers(3, 65))
+        lat = rng.uniform(-85.0, 85.0)
+        # every 5th ring is centred on the antimeridian
+        lng = 180.0 if r % 5 == 0 else rng.uniform(-180.0, 180.0)
+        radius = 10.0 ** rng.uniform(0.0, np.log10(3e5))
+        th = np.sort(rng.uniform(0.0, 2 * np.pi, n))
+        d = radius * rng.uniform(0.3, 1.0, n)
+        ys = lat + d * np.sin(th) / 111195.0
+        xs = lng + d * np.cos(th) / (111195.0 * np.cos(np.radians(lat)))
+        yield cm.covering_ring((xs + 180.0) % 360.0 - 180.0, ys)
+
+
+def test_coverings_pinned():
+    """Regression pin: 500 random caps (1 m - 2,000 km, anywhere) and 500
+    random rings (3-64 vertices, 1 m - 300 km, some across the
+    antimeridian) cover to exactly the cells they did before the
+    covering's float decision was rewritten."""
+    import hashlib
+
+    h = hashlib.sha256()
+    for cells in _pinned_coverings():
+        h.update(np.concatenate([[np.uint64(cells.size)], cells]).astype("<u8").tobytes())
+    assert h.hexdigest() == _COVERINGS_SHA256
