@@ -34,9 +34,9 @@ def cell16_udf(lat: pd.Series, lng: pd.Series) -> pd.Series:
 # `isnotnull` (or range) filter and push it below the Project that defines
 # the column, which re-evaluates a deterministic Python UDF there: two
 # ArrowEvalPython nodes, 2x Arrow transfers and 2x kernel work on the
-# 10^12-row side (still so on Spark 4.1.2, in both containment builders
-# and distance_join).  The function IS deterministic; the nondeterministic
-# marker is an evaluate-exactly-once barrier -- but Catalyst refuses
+# 10^12-row side (still so on Spark 4.1.2, in both containment builders).
+# The function IS deterministic; the nondeterministic marker is an
+# evaluate-exactly-once barrier -- but Catalyst refuses
 # nondeterministic expressions outside Project/Filter/Aggregate/Window, so
 # the marked variant is SCOPED to `with_point_cells` (a Project) and the
 # plain deterministic UDF stays available for join conditions / sorts.

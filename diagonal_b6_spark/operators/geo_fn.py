@@ -357,9 +357,8 @@ def s2_covering(
             y = np.asarray(y, dtype=np.float64)
             if fixed_level is None:
                 cells = covering_cells(x, y, t, max_cells, max_level)
-            else:  # s2-grid: the uncapped covering, coarsened to fixed_level
+            else:  # s2-grid: uncapped, every cell comes out at fixed_level
                 cells = covering_cells(x, y, t, 1 << 30, fixed_level)
-                cells = np.unique(cm.parent(cells, np.minimum(cm.level(cells), fixed_level)))
             toks = cm.token(cells)
             lat, lng = cm.cell_center_latlng(cells)
             lvl = cm.level(cells)

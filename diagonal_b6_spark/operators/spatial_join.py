@@ -40,7 +40,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..kernels import cellmath as cm
 from ..kernels import geom
 from . import cover as cover_ops
 
@@ -255,22 +254,18 @@ def distance_join(
     lng: str = "lng",
 ) -> DataFrame:
     """`intersecting-cap` analogue (b6/spatial.go:203-371): points within
-    radius_m of a center.  Cell prefilter via the cap covering; the exact
-    haversine refine is a pure column expression (whole-stage codegen --
-    no Arrow round-trip of the prefiltered table)."""
-    if "cell16" not in points.columns:
-        points = cover_ops.with_point_cells(points, lat, lng)
-    cap = cm.covering_cap(center_lat, center_lng, radius_m)
-    rmin = cm.id_to_signed(cm.range_min(cap)).tolist()
-    rmax = cm.id_to_signed(cm.range_max(cap)).tolist()
-    cond = None
-    for lo, hi in zip(rmin, rmax):
-        c = (F.col("cell16") >= F.lit(lo)) & (F.col("cell16") <= F.lit(hi))
-        cond = c if cond is None else (cond | c)
-    pre = points.filter(cond)
-    from .gridjoin import haversine_col
+    radius_m of a center, as two column predicates in one codegen stage:
+    a latitude band, then the exact haversine.  The band drops no hit
+    (the haversine term is at least sin^2(dlat/2), so d >= R*|dlat|) and
+    pushes down to Parquet row-group statistics; a longitude bound would
+    need pole and antimeridian cases, so there is none.  The pad covers
+    rounding: 1e-9 relative, plus 1e-12 degrees for the last ulps of the
+    degree-to-radian products, which decide at radii of 1 mm and below.
+    S2 cap coverings belong where an index exists (checkpoint manifest
+    pruning, the s2 shell functions), not in front of a full scan."""
+    from .gridjoin import haversine_col, margin_deg
 
-    dist = haversine_col(
-        F.col(lat), F.col(lng), F.lit(center_lat), F.lit(center_lng)
-    )
-    return pre.withColumn("dist_m", dist).filter(F.col("dist_m") <= radius_m)
+    m = margin_deg(radius_m) * (1 + 1e-9) + 1e-12
+    dist = haversine_col(F.col(lat), F.col(lng), F.lit(center_lat), F.lit(center_lng))
+    band = points.filter(F.col(lat).between(center_lat - m, center_lat + m))
+    return band.withColumn("dist_m", dist).filter(F.col("dist_m") <= radius_m)

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from . import parse as P
 from ..operators import find as find_ops
+from ..operators import spatial_join
 
 
 class ShellError(ValueError):
@@ -181,8 +182,6 @@ def _find(env: Env, q) -> DataFrame:
             return a.join(b.select("feature_id"), "feature_id", "semi")
         return a.unionByName(b).dropDuplicates(["feature_id"])
     if isinstance(q, QIntersectsPoint):
-        from ..operators import spatial_join
-
         probe = env.spark.createDataFrame(
             [(0, q.lat, q.lng)], "probe_id long, lat double, lng double"
         )
@@ -191,8 +190,6 @@ def _find(env: Env, q) -> DataFrame:
             F.broadcast(hits.select("feature_id").distinct()), "feature_id", "semi"
         )
     if isinstance(q, QIntersectsArea):
-        from ..operators import spatial_join
-
         verts = feats.select(
             F.col("feature_id").alias("vid"),
             F.explode(F.arrays_zip("xs", "ys")).alias("v"),
@@ -208,19 +205,15 @@ def _find(env: Env, q) -> DataFrame:
             "semi",
         )
     if isinstance(q, QIntersectsCap):
-        from ..operators.gridjoin import haversine_col
-
         # Feature intersects the cap iff any vertex is within radius; for
         # the point type this is the reference's exact cap test
-        # (b6/spatial.go:203-371).  Area/path curvature between vertices is
-        # not refined here -- documented v1 approximation.
+        # (b6/spatial.go:203-371), and distance_join is the engine's one
+        # cap test.  Area/path curvature between vertices is not refined
+        # here -- documented v1 approximation.
         v = feats.select(
             "feature_id", F.explode(F.arrays_zip("xs", "ys")).alias("v")
         ).select("feature_id", F.col("v.ys").alias("lat"), F.col("v.xs").alias("lng"))
-        near = v.filter(
-            haversine_col(F.col("lat"), F.col("lng"), F.lit(q.lat), F.lit(q.lng))
-            <= q.radius_m
-        )
+        near = spatial_join.distance_join(v, q.lat, q.lng, q.radius_m, point_id="feature_id")
         return feats.join(
             F.broadcast(near.select("feature_id").distinct()), "feature_id", "semi"
         )

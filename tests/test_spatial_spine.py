@@ -103,14 +103,71 @@ def test_poi_golden_counts(spark, feats):
     assert len(res) == 15  # 5 POIs outside all areas
 
 
-def test_distance_join_cap(spark, images, images_pd):
-    res = spatial_join.distance_join(images, 51.535, -0.125, 300.0)
-    got = set(r["image_id"] for r in res.select("image_id").collect())
-    d = geom.haversine_m(
-        images_pd["lat"].to_numpy(), images_pd["lng"].to_numpy(), 51.535, -0.125
+def _cap_points(clat, clng, radius_m):
+    """A seeded global point set, plus points on the centre's meridian at
+    the band edges clat +- m (m = the radius in latitude degrees), 1e-12
+    degrees either side of them, and a few ulps either side of them."""
+    from diagonal_b6_spark.operators.gridjoin import margin_deg
+
+    rng = np.random.default_rng(20261020)
+    lat = list(np.degrees(np.arcsin(rng.uniform(-1, 1, 4000))))
+    lng = list(rng.uniform(-180, 180, 4000))
+    m = margin_deg(radius_m)
+    edge = [clat]
+    for e in (clat - m, clat + m):
+        edge += [e - 1e-12, e, e + 1e-12]
+        lo = hi = e
+        for _ in range(3):
+            lo, hi = np.nextafter(lo, -np.inf), np.nextafter(hi, np.inf)
+            edge += [lo, hi]
+    edge = [v for v in edge if -90.0 <= v <= 90.0]
+    return pd.DataFrame(
+        {
+            "image_id": [f"p{k}" for k in range(len(lat) + len(edge))],
+            "lat": lat + edge,
+            "lng": lng + [clng] * len(edge),
+        }
     )
-    want = set(images_pd.loc[d <= 300.0, "image_id"])
+
+
+@pytest.mark.parametrize(
+    "clat,clng,radius_m",
+    [
+        (51.535, -0.125, 300.0),
+        (89.99, 10.0, 5_000_000.0),
+        (-89.99, -170.0, 1.0),
+        (12.5, 179.9999, 5_000_000.0),
+        (-33.0, -179.9999, 1.0),
+        (60.7, 23.4, 0.0),
+        (-61.1, 100.0, 1.0),
+        (0.0, 0.0, 21_000_000.0),
+    ],
+    ids=[
+        "london-300m", "north-pole-5000km", "south-pole-1m", "antimeridian-east-5000km",
+        "antimeridian-west-1m", "zero-radius", "high-lat-1m", "whole-sphere-21000km",
+    ],
+)
+def test_distance_join_cap(spark, tmp_path, clat, clng, radius_m):
+    """The latitude band never drops a hit: the cap equals the same
+    parquet table filtered by the haversine alone.  The plan has no
+    Python node and pushes the `lat` band into the scan."""
+    from diagonal_b6_spark.operators.gridjoin import haversine_col
+    from pyspark.sql import functions as F
+
+    path = str(tmp_path / "points.parquet")
+    spark.createDataFrame(_cap_points(clat, clng, radius_m)).write.parquet(path)
+    pts = spark.read.parquet(path)
+    res = spatial_join.distance_join(pts, clat, clng, radius_m)
+    got = {r["image_id"] for r in res.select("image_id").collect()}
+    dist = haversine_col(F.col("lat"), F.col("lng"), F.lit(clat), F.lit(clng))
+    want = {r["image_id"] for r in pts.filter(dist <= radius_m).select("image_id").collect()}
     assert got == want and len(want) > 0
+    plan = res._jdf.queryExecution().executedPlan().toString()
+    for node in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas"):
+        assert node not in plan, plan
+    pushed = [ln.split("PushedFilters:")[1] for ln in plan.splitlines() if "PushedFilters" in ln]
+    assert pushed and "GreaterThanOrEqual(lat," in pushed[0], plan
+    assert "LessThanOrEqual(lat," in pushed[0], plan
 
 
 def test_tile_assignments_match_oracle(spark, images, images_pd):
