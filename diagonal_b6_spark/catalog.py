@@ -528,7 +528,7 @@ def q_geo_knn_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_geo_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = _events_points(spark, sf_dir)
-    out = spatial_join.distance_join(pts, CAP_LAT, CAP_LNG, CAP_R_M, point_id="event_id")
+    out = spatial_join.distance_join(pts, CAP_LAT, CAP_LNG, CAP_R_M)
     return out.select("event_id")
 
 

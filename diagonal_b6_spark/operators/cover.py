@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..kernels import cellmath as cm
+from .gridjoin import sql_col, sql_lit
 
 
 @F.pandas_udf(T.LongType())
@@ -134,21 +135,19 @@ def feature_cover_index(
 def tile_xy_cols(zoom: int, lat: str = "lat", lng: str = "lng"):
     """Web-mercator tile (x, y) as pure JVM column expressions
     (b6/tiles.go:202-257 formulas).  Stays inside whole-stage codegen --
-    tile assignment over 10^12 rows must not cross into Python at all."""
-    n = float(1 << zoom)
+    tile assignment over 10^12 rows must not cross into Python at all.
+    Each is one SQL text (one py4j call, not one per operator)."""
+    n = sql_lit(float(1 << zoom))
+    la, ln = sql_col(lat), sql_col(lng)
     # clamp latitude to the web-mercator domain (matches the numpy kernel)
-    latc = F.greatest(F.lit(-85.05112878), F.least(F.col(lat), F.lit(85.05112878)))
-    latr = F.radians(latc)
-    x = F.floor((F.col(lng) + F.lit(180.0)) / F.lit(360.0) * F.lit(n)).cast("long")
-    y = F.floor(
-        (F.lit(1.0) - F.log(F.tan(latr) + F.lit(1.0) / F.cos(latr)) / F.lit(float(np.pi)))
-        / F.lit(2.0)
-        * F.lit(n)
-    ).cast("long")
-    hi = F.lit((1 << zoom) - 1)
-    x = F.greatest(F.lit(0).cast("long"), F.least(x, hi))
-    y = F.greatest(F.lit(0).cast("long"), F.least(y, hi))
-    return x, y
+    latr = f"RADIANS(GREATEST({sql_lit(-85.05112878)}, LEAST({la}, 85.05112878D)))"
+    x = f"CAST(FLOOR((({ln} + 180.0D) / 360.0D) * {n}) AS BIGINT)"
+    y = (
+        f"CAST(FLOOR(((1.0D - (LN(TAN({latr}) + (1.0D / COS({latr}))) / {sql_lit(float(np.pi))}))"
+        f" / 2.0D) * {n}) AS BIGINT)"
+    )
+    hi = (1 << zoom) - 1
+    return tuple(F.expr(f"GREATEST(0L, LEAST({v}, {hi}))") for v in (x, y))
 
 
 _GEOHASH32 = "0123456789bcdefghjkmnpqrstuvwxyz"
@@ -162,7 +161,8 @@ def geohash_col(precision: int = 8, lat: str = "lat", lng: str = "lng"):
     H3-style hex, mercator tiles, geohash) -- all whole-stage-codegen
     column math, usable directly as a bucketing/join key at 10^12
     rows.  The unrolled shift/mask chain is exactly replayable in SQL,
-    so geohash keys get full value oracles."""
+    so geohash keys get full value oracles.  Built as one SQL text (one
+    py4j call, not one per operator)."""
     if not 1 <= precision <= 12:
         raise ValueError(
             f"geohash precision must be 1..12 (60 bits fit a long), got {precision}"
@@ -170,28 +170,23 @@ def geohash_col(precision: int = 8, lat: str = "lat", lng: str = "lng"):
     nbits = 5 * precision
     lngbits = (nbits + 1) // 2
     latbits = nbits // 2
-    x = F.floor((F.col(lng) + F.lit(180.0)) / F.lit(360.0) * F.lit(float(1 << lngbits))).cast("long")
-    y = F.floor((F.col(lat) + F.lit(90.0)) / F.lit(180.0) * F.lit(float(1 << latbits))).cast("long")
-    x = F.greatest(F.lit(0).cast("long"), F.least(x, F.lit((1 << lngbits) - 1)))
-    y = F.greatest(F.lit(0).cast("long"), F.least(y, F.lit((1 << latbits) - 1)))
-    v = F.lit(0).cast("long")
-    for i in range(lngbits):
-        v = v + F.shiftleft(
-            F.shiftright(x, lngbits - 1 - i).bitwiseAND(F.lit(1)), nbits - 1 - 2 * i
-        )
-    for i in range(latbits):
-        v = v + F.shiftleft(
-            F.shiftright(y, latbits - 1 - i).bitwiseAND(F.lit(1)), nbits - 2 - 2 * i
-        )
+
+    def grid(col, offset, span, bits):
+        q = f"CAST(FLOOR((({sql_col(col)} + {offset}) / {span}) * {sql_lit(float(1 << bits))}) AS BIGINT)"
+        return f"GREATEST(0L, LEAST({q}, {(1 << bits) - 1}))"
+
+    x = grid(lng, "180.0D", "360.0D", lngbits)
+    y = grid(lat, "90.0D", "180.0D", latbits)
+    v = " + ".join(
+        ["0L"]
+        + [f"shiftleft(shiftright({x}, {lngbits - 1 - i}) & 1, {nbits - 1 - 2 * i})" for i in range(lngbits)]
+        + [f"shiftleft(shiftright({y}, {latbits - 1 - i}) & 1, {nbits - 2 - 2 * i})" for i in range(latbits)]
+    )
     chars = [
-        F.substring(
-            F.lit(_GEOHASH32),
-            F.shiftright(v, 5 * (precision - 1 - k)).bitwiseAND(F.lit(31)) + F.lit(1),
-            F.lit(1),
-        )
+        f"substring('{_GEOHASH32}', (shiftright({v}, {5 * (precision - 1 - k)}) & 31) + 1, 1)"
         for k in range(precision)
     ]
-    return F.concat(*chars)
+    return F.expr(f"concat({', '.join(chars)})")
 
 
 def with_tiles(df: DataFrame, zoom: int, lat: str = "lat", lng: str = "lng") -> DataFrame:

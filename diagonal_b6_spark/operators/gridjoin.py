@@ -76,28 +76,104 @@ def explode_bbox_cells(
     )
 
 
+class SqlText:
+    """A Spark SQL expression as text that composes with + - * / the way a
+    Column does, so one formula renders to Columns (given `F`) or to the
+    text of a single `F.expr` (given `SQL`).  Python ints render as SQL
+    ints and floats with a `D` suffix: a bare `1.5` is a DECIMAL in
+    Spark SQL."""
+
+    __slots__ = ("text",)
+
+    def __init__(self, text: str):
+        self.text = text
+
+    def __str__(self) -> str:
+        return self.text
+
+    def _op(self, op: str, other, reflected: bool = False) -> "SqlText":
+        a, b = (other, self) if reflected else (self, other)
+        return SqlText(f"({sql_lit(a)} {op} {sql_lit(b)})")
+
+    def __add__(self, o):
+        return self._op("+", o)
+
+    def __sub__(self, o):
+        return self._op("-", o)
+
+    def __mul__(self, o):
+        return self._op("*", o)
+
+    def __rmul__(self, o):
+        return self._op("*", o, True)
+
+    def __truediv__(self, o):
+        return self._op("/", o)
+
+
+def sql_lit(v) -> str:
+    """A Python value as Spark SQL text: SqlText as is, ints as ints,
+    floats with a `D` suffix, strings as quoted literals."""
+    if isinstance(v, SqlText):
+        return v.text
+    if isinstance(v, (int, np.integer)):
+        text = str(int(v)) if -(2**31) <= v < 2**31 else f"{int(v)}L"
+    elif isinstance(v, float) and np.isfinite(v):
+        text = f"{float(v)!r}D"
+    elif isinstance(v, str):
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    else:
+        raise TypeError(f"no SQL literal for {v!r}")
+    return f"({text})" if text.startswith("-") else text
+
+
+def sql_col(name: str) -> SqlText:
+    """A column reference as text, resolved like `F.col(name)` (a dotted
+    name is qualifier.column)."""
+    return SqlText(".".join(f"`{part}`" for part in name.split(".")))
+
+
+def _sql_fn(name: str):
+    return lambda *args: SqlText(f"{name}({', '.join(sql_lit(a) for a in args)})")
+
+
+class SQL:
+    """The `pyspark.sql.functions` subset the shared formulas use, as text."""
+
+    lit = staticmethod(lambda v: SqlText(sql_lit(v)))
+    radians = staticmethod(_sql_fn("RADIANS"))
+    sin = staticmethod(_sql_fn("SIN"))
+    cos = staticmethod(_sql_fn("COS"))
+    pow = staticmethod(_sql_fn("POWER"))
+    sqrt = staticmethod(_sql_fn("SQRT"))
+    asin = staticmethod(_sql_fn("ASIN"))
+    least = staticmethod(_sql_fn("LEAST"))
+
+
 def haversine_col(lat1, lng1, lat2, lng2):
     """Haversine meters as a whole-stage-codegen column expression
     (identical formula to kernels/geom.haversine_m)."""
-    return haversine_a_to_m(haversine_a_col(lat1, lng1, lat2, lng2))
+    return haversine_a_to_m(F, haversine_a(F, lat1, lng1, lat2, lng2))
 
 
-def haversine_a_col(lat1, lng1, lat2, lng2):
-    """The haversine term a (sin^2 of half the central angle).  Meters
-    are non-decreasing in a, so the nearest of several points can take
-    the least a and convert once: haversine_a_to_m(least(a_i)) equals
+def haversine_a(f, lat1, lng1, lat2, lng2):
+    """The haversine term a (sin^2 of half the central angle), the
+    engine's one copy of the formula, over `f` = F (Column operands) or
+    SQL (text operands: sql_col names and float literals).  Meters are
+    non-decreasing in a, so the nearest of several points can take the
+    least a and convert once: haversine_a_to_m(least(a_i)) equals
     least(haversine_col_i) bit for bit."""
-    rlat1, rlng1 = F.radians(lat1), F.radians(lng1)
-    rlat2, rlng2 = F.radians(lat2), F.radians(lng2)
-    return F.pow(F.sin((rlat2 - rlat1) / 2), 2) + F.cos(rlat1) * F.cos(rlat2) * F.pow(
-        F.sin((rlng2 - rlng1) / 2), 2
+    rlat1, rlng1 = f.radians(lat1), f.radians(lng1)
+    rlat2, rlng2 = f.radians(lat2), f.radians(lng2)
+    return f.pow(f.sin((rlat2 - rlat1) / 2), 2) + f.cos(rlat1) * f.cos(rlat2) * f.pow(
+        f.sin((rlng2 - rlng1) / 2), 2
     )
 
 
-def haversine_a_to_m(a):
+def haversine_a_to_m(f, a):
     """Meters from the haversine term, with a clamped to 1 as
     kernels/geom.haversine_m clamps it."""
-    return 2 * F.lit(EARTH_RADIUS_M) * F.asin(F.sqrt(F.least(a, F.lit(1.0))))
+    return 2 * f.lit(EARTH_RADIUS_M) * f.asin(f.sqrt(f.least(a, f.lit(1.0))))
 
 
 def _point_segment_frame(px, py, x1, y1, x2, y2):

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .gridjoin import haversine_a_col, haversine_a_to_m, haversine_col, probe_cells
+from .gridjoin import SQL, haversine_a, haversine_a_to_m, haversine_col, probe_cells, sql_col, sql_lit
 
 
 def knn_bruteforce(
@@ -61,16 +61,16 @@ def nearest_expr(points: DataFrame, pois: list[tuple[str, float, float]],
     in the map-side form that survives 10^12 input rows.
 
     pois: [(poi_id, lat, lng), ...] -- must be small (expression tree is
-    O(len(pois))); for large POI sets use knn_grid.
+    O(len(pois))); for large POI sets use knn_grid.  The chain is built
+    as one SQL text (one py4j call, not one per operator).
     """
+    p = (sql_col(lat), sql_col(lng))
     structs = [
-        F.struct(
-            haversine_col(F.lit(plat), F.lit(plng), F.col(lat), F.col(lng)).alias("d"),
-            F.lit(pid).alias("poi"),
-        )
+        f"struct({haversine_a_to_m(SQL, haversine_a(SQL, plat, plng, *p))} AS d, "
+        f"{sql_lit(pid)} AS poi)"
         for pid, plat, plng in pois
     ]
-    best = F.least(*structs) if len(structs) > 1 else structs[0]
+    best = F.expr(f"LEAST({', '.join(structs)})" if len(structs) > 1 else structs[0])
     return points.withColumn("nearest_poi", best["poi"]).withColumn(
         "nearest_dist_m", best["d"]
     )
@@ -82,12 +82,12 @@ def nearest_dist_expr(pois: list[tuple[str, float, float]],
     chain over plain doubles -- full whole-stage codegen (struct least
     falls back to interpreted comparison and is ~10x slower).  The chain
     compares haversine terms and converts the least one to meters once
-    (equal to the least of the per-POI distances, see haversine_a_col)."""
-    terms = [
-        haversine_a_col(F.lit(plat), F.lit(plng), F.col(lat), F.col(lng))
-        for _, plat, plng in pois
-    ]
-    return haversine_a_to_m(F.least(*terms) if len(terms) > 1 else terms[0])
+    (equal to the least of the per-POI distances, see haversine_a), and
+    is built as one SQL text: a Column-API chain over 20 POIs costs
+    hundreds of py4j calls per build."""
+    p = (sql_col(lat), sql_col(lng))
+    terms = [haversine_a(SQL, plat, plng, *p) for _, plat, plng in pois]
+    return F.expr(str(haversine_a_to_m(SQL, SQL.least(*terms) if len(terms) > 1 else terms[0])))
 
 
 def knn_grid(

@@ -249,7 +249,6 @@ def distance_join(
     center_lat: float,
     center_lng: float,
     radius_m: float,
-    point_id: str = "image_id",
     lat: str = "lat",
     lng: str = "lng",
 ) -> DataFrame:
@@ -262,10 +261,11 @@ def distance_join(
     rounding: 1e-9 relative, plus 1e-12 degrees for the last ulps of the
     degree-to-radian products, which decide at radii of 1 mm and below.
     S2 cap coverings belong where an index exists (checkpoint manifest
-    pruning, the s2 shell functions), not in front of a full scan."""
+    pruning, the s2 shell functions), not in front of a full scan.
+    Returns the input columns of the rows in the cap: a `dist_m` column
+    would be inlined into the filter and evaluated a second time."""
     from .gridjoin import haversine_col, margin_deg
 
     m = margin_deg(radius_m) * (1 + 1e-9) + 1e-12
     dist = haversine_col(F.col(lat), F.col(lng), F.lit(center_lat), F.lit(center_lng))
-    band = points.filter(F.col(lat).between(center_lat - m, center_lat + m))
-    return band.withColumn("dist_m", dist).filter(F.col("dist_m") <= radius_m)
+    return points.filter(F.col(lat).between(center_lat - m, center_lat + m)).filter(dist <= radius_m)

@@ -181,6 +181,14 @@ def containment_pipeline(
     return spatial_join.containment_join_bucketed(images, feats, salt=salt)
 
 
+def read_images(spark: SparkSession, images_path: str) -> DataFrame:
+    """The image table at `images_path`, read with the contract schema
+    (fixtures.IMAGE_POINT_SCHEMA) so that no schema-inference job runs.
+    A column the files lack reads as nulls (run_flagship raises on
+    that); a column of another type raises in the Parquet reader."""
+    return spark.read.schema(fixtures.IMAGE_POINT_SCHEMA).parquet(images_path)
+
+
 def run_flagship(
     spark: SparkSession,
     n_images: int,
@@ -194,11 +202,13 @@ def run_flagship(
     its per-partition row counts give `tile_rows`.
     With images_path set, reads a pre-materialized image table from
     parquet (the Iceberg-table posture; generation excluded from timing
-    per BASELINE.md protocol step 3)."""
-    if images_path:
-        images = spark.read.parquet(images_path)
-    else:
-        images = fixtures.images_table(spark, n_images)
+    per BASELINE.md protocol step 3) through read_images: the contract
+    schema `image_id string, lat double, lng double`, with no
+    schema-inference job.  The fused aggregate also counts the non-null
+    values of those three columns, and a non-empty table in which one of
+    them is all null (what a missing column reads as) raises ValueError
+    naming it."""
+    images = read_images(spark, images_path) if images_path else fixtures.images_table(spark, n_images)
     pts = cover_ops.with_point_cells(images)
     containment = containment_pipeline(spark, pts, strategy=strategy)
     dist = knn_ops.nearest_dist_expr(poi_list(spark))
@@ -207,8 +217,10 @@ def run_flagship(
         x, y = cover_ops.tile_xy_cols(z)
         s = x + y
         tile_sum = s if tile_sum is None else (tile_sum + s)
+    columns = ("image_id", "lat", "lng")
     agg_df = images.agg(
         F.count("*").alias("n"),
+        *[F.count(c).alias(c) for c in columns],
         F.sum(F.round(dist, 3)).alias("knn_ck"),
         F.sum(tile_sum).alias("tile_ck"),
     )
@@ -219,8 +231,11 @@ def run_flagship(
     with cf.ThreadPoolExecutor(max_workers=2) as pool:
         f_pairs = pool.submit(containment.count)
         f_agg = pool.submit(lambda: agg_df.collect()[0])
-        n_pairs = f_pairs.result()
         row = f_agg.result()
+        for c in columns:
+            if row["n"] and not row[c]:
+                raise ValueError(f"run_flagship: the images table has no non-null `{c}` column")
+        n_pairs = f_pairs.result()
     tile_rows = row["n"] * len(zooms)
     if checkpoint_root:
         m = ckpt.write_snapshot(

@@ -213,7 +213,7 @@ def _find(env: Env, q) -> DataFrame:
         v = feats.select(
             "feature_id", F.explode(F.arrays_zip("xs", "ys")).alias("v")
         ).select("feature_id", F.col("v.ys").alias("lat"), F.col("v.xs").alias("lng"))
-        near = spatial_join.distance_join(v, q.lat, q.lng, q.radius_m, point_id="feature_id")
+        near = spatial_join.distance_join(v, q.lat, q.lng, q.radius_m)
         return feats.join(
             F.broadcast(near.select("feature_id").distinct()), "feature_id", "semi"
         )

@@ -31,8 +31,9 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     from diagonal_b6_spark.pipeline import run_flagship
+    from diagonal_b6_spark.session import ENGINE_CONF
 
-    spark = SparkSession.builder.appName("diagonal_b6_flagship").getOrCreate()
+    spark = SparkSession.builder.appName("diagonal_b6_flagship").config(map=ENGINE_CONF).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     counters = run_flagship(
         spark,

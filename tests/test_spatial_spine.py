@@ -168,6 +168,9 @@ def test_distance_join_cap(spark, tmp_path, clat, clng, radius_m):
     pushed = [ln.split("PushedFilters:")[1] for ln in plan.splitlines() if "PushedFilters" in ln]
     assert pushed and "GreaterThanOrEqual(lat," in pushed[0], plan
     assert "LessThanOrEqual(lat," in pushed[0], plan
+    # the haversine is evaluated once per row: no projected copy of it
+    assert plan.count("ASIN(") == 1, plan
+    assert res.columns == pts.columns
 
 
 def test_tile_assignments_match_oracle(spark, images, images_pd):
@@ -218,6 +221,127 @@ def test_run_flagship_one_counter_path(spark, tmp_path):
     lat, lng = pdf["lat"].to_numpy(), pdf["lng"].to_numpy()
     dist = np.min([geom.haversine_m(lat, lng, plat, plng) for _, plat, plng in poi_list(spark)], axis=0)
     assert want["knn_checksum"] == pytest.approx(np.round(dist, 3).sum(), abs=0.2)
+
+
+def _write_images(spark, path, columns):
+    fixtures.images_table(spark, 200).select(*columns).write.parquet(path)
+    return path
+
+
+@pytest.mark.parametrize("missing", ["lat", "image_id"])
+def test_run_flagship_raises_on_missing_column(spark, tmp_path, missing):
+    """A table without a contract column reads as nulls under the
+    contract schema; run_flagship raises instead of counting 0 pairs."""
+    from diagonal_b6_spark.pipeline import run_flagship
+
+    columns = [c for c in ("image_id", "lat", "lng", "caption") if c != missing]
+    path = _write_images(spark, str(tmp_path / "images"), columns)
+    with pytest.raises(ValueError, match=f"`{missing}`"):
+        run_flagship(spark, 200, images_path=path)
+
+
+def test_read_images_starts_no_job(spark, tmp_path):
+    """Building the images read starts no Spark job (no schema
+    inference); a plain parquet read of the same files does."""
+    import time
+
+    from diagonal_b6_spark.pipeline import read_images
+
+    path = _write_images(spark, str(tmp_path / "images"), ["image_id", "lat", "lng"])
+    sc = spark.sparkContext
+    sc.setJobGroup("read_images", "contract-schema read")
+    df = read_images(spark, path)
+    sc.setJobGroup("infer_schema", "schema-inferring read")
+    spark.read.parquet(path)
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    # listener events arrive in order: once the second group's job shows,
+    # any job of the first group has shown too
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup("infer_schema") and time.monotonic() < deadline:
+        time.sleep(0.05)
+    assert tracker.getJobIdsForGroup("infer_schema")
+    assert tracker.getJobIdsForGroup("read_images") == []
+    assert df.schema.simpleString() == f"struct<{fixtures.IMAGE_POINT_SCHEMA.replace(' ', ':').replace(',:', ',')}>"
+
+
+_EDGE_LATS = [90.0, -90.0, 85.05112878, -85.05112878, 85.051128785, -85.051128785, 0.0]
+_EDGE_LNGS = [180.0, -180.0, np.nextafter(180.0, 0.0), np.nextafter(-180.0, 0.0), 0.0]
+
+
+def _edge_points(spark, n=2000, seed=12):
+    rng = np.random.default_rng(seed)
+    lat = np.concatenate([rng.uniform(-90, 90, n), np.repeat(_EDGE_LATS, len(_EDGE_LNGS))])
+    lng = np.concatenate([rng.uniform(-180, 180, n), np.tile(_EDGE_LNGS, len(_EDGE_LATS))])
+    pdf = pd.DataFrame({"k": np.arange(len(lat)), "lat": lat, "lng": lng})
+    return pdf, spark.createDataFrame(pdf)
+
+
+def _geohash_np(lat, lng, precision):
+    """numpy geohash: the same bit grids, interleaved lng first."""
+    nbits = 5 * precision
+    lngbits, latbits = (nbits + 1) // 2, nbits // 2
+    x = np.clip(np.floor((lng + 180.0) / 360.0 * float(1 << lngbits)), 0, (1 << lngbits) - 1).astype(np.int64)
+    y = np.clip(np.floor((lat + 90.0) / 180.0 * float(1 << latbits)), 0, (1 << latbits) - 1).astype(np.int64)
+    v = np.zeros(len(lat), dtype=np.int64)
+    for i in range(nbits):
+        src, nb, j = (x, lngbits, i // 2) if i % 2 == 0 else (y, latbits, i // 2)
+        v |= ((src >> (nb - 1 - j)) & 1) << (nbits - 1 - i)
+    alphabet = np.array(list("0123456789bcdefghjkmnpqrstuvwxyz"))
+    digits = [alphabet[(v >> (5 * (precision - 1 - k))) & 31] for k in range(precision)]
+    return ["".join(t) for t in zip(*digits)]
+
+
+def test_tile_and_geohash_text_match_numpy(spark):
+    """The SQL-text tile and geohash columns equal the numpy formulas on
+    random points and at the clamp and antimeridian edges."""
+    pdf, df = _edge_points(spark)
+    zooms, precisions = (0, 1, 12, 15, 16, 20), (1, 5, 8, 12)
+    cols = [c.alias(f"{a}{z}") for z in zooms for a, c in zip("xy", cover_ops.tile_xy_cols(z))]
+    cols += [cover_ops.geohash_col(p).alias(f"g{p}") for p in precisions]
+    got = df.select("k", *cols).toPandas().sort_values("k")
+    lat, lng = pdf["lat"].to_numpy(), pdf["lng"].to_numpy()
+    for z in zooms:
+        xt, yt = geom.latlng_to_tile(lat, lng, z)
+        assert np.array_equal(got[f"x{z}"].to_numpy(), xt), z
+        assert np.array_equal(got[f"y{z}"].to_numpy(), yt), z
+    for p in precisions:
+        assert got[f"g{p}"].tolist() == _geohash_np(lat, lng, p), p
+
+
+def test_nearest_text_chains_match_haversine(spark):
+    """nearest_dist_expr and nearest_expr equal, bit for bit, the least of
+    the per-POI haversine_col distances (the Column rendering of the same
+    formula), with ties going to the least id; and they agree with
+    geom.haversine_m to the last ulps (the JVM's and numpy's sin/cos
+    differ there, so no Spark form is bit-exact against numpy)."""
+    from pyspark.sql import functions as F
+
+    from diagonal_b6_spark.operators import knn
+    from diagonal_b6_spark.operators.gridjoin import haversine_col
+    from diagonal_b6_spark.pipeline import poi_list
+
+    pois = poi_list(spark) + [("it's\\a 'quoted' id", -33.86, 151.21)]
+    pdf, df = _edge_points(spark)
+    per_poi = [
+        haversine_col(F.lit(plat), F.lit(plng), F.col("lat"), F.col("lng")).alias(f"h{i}")
+        for i, (_, plat, plng) in enumerate(pois)
+    ]
+    got = (
+        knn.nearest_expr(df, pois)
+        .select("k", "nearest_poi", "nearest_dist_m", knn.nearest_dist_expr(pois).alias("d"), *per_poi)
+        .toPandas()
+        .sort_values("k")
+    )
+    dist = got[[f"h{i}" for i in range(len(pois))]].to_numpy().T
+    best = dist.min(axis=0)
+    assert np.array_equal(got["d"].to_numpy(), best)
+    assert np.array_equal(got["nearest_dist_m"].to_numpy(), best)
+    ids = np.array([pid for pid, _, _ in pois], dtype=object)
+    assert got["nearest_poi"].tolist() == [min(ids[dist[:, j] == best[j]]) for j in range(len(best))]
+    lat, lng = pdf["lat"].to_numpy(), pdf["lng"].to_numpy()
+    want = np.array([geom.haversine_m(plat, plng, lat, lng) for _, plat, plng in pois])
+    np.testing.assert_allclose(dist, want, rtol=1e-14, atol=0)
 
 
 def test_antimeridian_containment(spark, feats):
