@@ -41,9 +41,6 @@ IMAGE_SCHEMA = (
     "image_id string, bytes binary, w int, h int, fmt string, "
     "caption string, phash long, lat double, lng double"
 )
-# the image table's contract for the spatial pipeline: the columns
-# run_flagship reads from an existing table
-IMAGE_POINT_SCHEMA = "image_id string, lat double, lng double"
 
 
 def _frac(x: np.ndarray) -> np.ndarray:

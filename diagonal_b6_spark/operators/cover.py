@@ -140,14 +140,14 @@ def tile_xy_cols(zoom: int, lat: str = "lat", lng: str = "lng"):
     n = sql_lit(float(1 << zoom))
     la, ln = sql_col(lat), sql_col(lng)
     # clamp latitude to the web-mercator domain (matches the numpy kernel)
-    latr = f"RADIANS(GREATEST({sql_lit(-85.05112878)}, LEAST({la}, 85.05112878D)))"
-    x = f"CAST(FLOOR((({ln} + 180.0D) / 360.0D) * {n}) AS BIGINT)"
+    latr = f"RADIANS(GREATEST({sql_lit(-85.05112878)}, LEAST({la}, {sql_lit(85.05112878)})))"
+    x = f"CAST(FLOOR((({ln} + {sql_lit(180.0)}) / {sql_lit(360.0)}) * {n}) AS BIGINT)"
     y = (
-        f"CAST(FLOOR(((1.0D - (LN(TAN({latr}) + (1.0D / COS({latr}))) / {sql_lit(float(np.pi))}))"
-        f" / 2.0D) * {n}) AS BIGINT)"
+        f"CAST(FLOOR((({sql_lit(1.0)} - (LN(TAN({latr}) + ({sql_lit(1.0)} / COS({latr})))"
+        f" / {sql_lit(float(np.pi))})) / {sql_lit(2.0)}) * {n}) AS BIGINT)"
     )
-    hi = (1 << zoom) - 1
-    return tuple(F.expr(f"GREATEST(0L, LEAST({v}, {hi}))") for v in (x, y))
+    hi = sql_lit((1 << zoom) - 1)
+    return tuple(F.expr(f"GREATEST({sql_lit(0)}, LEAST({v}, {hi}))") for v in (x, y))
 
 
 _GEOHASH32 = "0123456789bcdefghjkmnpqrstuvwxyz"
@@ -172,18 +172,21 @@ def geohash_col(precision: int = 8, lat: str = "lat", lng: str = "lng"):
     latbits = nbits // 2
 
     def grid(col, offset, span, bits):
-        q = f"CAST(FLOOR((({sql_col(col)} + {offset}) / {span}) * {sql_lit(float(1 << bits))}) AS BIGINT)"
-        return f"GREATEST(0L, LEAST({q}, {(1 << bits) - 1}))"
+        q = (
+            f"CAST(FLOOR((({sql_col(col)} + {sql_lit(offset)}) / {sql_lit(span)})"
+            f" * {sql_lit(float(1 << bits))}) AS BIGINT)"
+        )
+        return f"GREATEST({sql_lit(0)}, LEAST({q}, {sql_lit((1 << bits) - 1)}))"
 
-    x = grid(lng, "180.0D", "360.0D", lngbits)
-    y = grid(lat, "90.0D", "180.0D", latbits)
+    x = grid(lng, 180.0, 360.0, lngbits)
+    y = grid(lat, 90.0, 180.0, latbits)
     v = " + ".join(
-        ["0L"]
+        [sql_lit(0)]
         + [f"shiftleft(shiftright({x}, {lngbits - 1 - i}) & 1, {nbits - 1 - 2 * i})" for i in range(lngbits)]
         + [f"shiftleft(shiftright({y}, {latbits - 1 - i}) & 1, {nbits - 2 - 2 * i})" for i in range(latbits)]
     )
     chars = [
-        f"substring('{_GEOHASH32}', (shiftright({v}, {5 * (precision - 1 - k)}) & 31) + 1, 1)"
+        f"substring({sql_lit(_GEOHASH32)}, (shiftright({v}, {5 * (precision - 1 - k)}) & 31) + 1, 1)"
         for k in range(precision)
     ]
     return F.expr(f"concat({', '.join(chars)})")

@@ -183,10 +183,11 @@ def containment_pipeline(
 
 def read_images(spark: SparkSession, images_path: str) -> DataFrame:
     """The image table at `images_path`, read with the contract schema
-    (fixtures.IMAGE_POINT_SCHEMA) so that no schema-inference job runs.
-    A column the files lack reads as nulls (run_flagship raises on
-    that); a column of another type raises in the Parquet reader."""
-    return spark.read.schema(fixtures.IMAGE_POINT_SCHEMA).parquet(images_path)
+    (fixtures.IMAGE_SCHEMA) so that no schema-inference job runs; column
+    pruning still reads only the columns a query uses.  A column the
+    files lack reads as nulls (run_flagship raises on that); a column of
+    another type raises in the Parquet reader."""
+    return spark.read.schema(fixtures.IMAGE_SCHEMA).parquet(images_path)
 
 
 def run_flagship(
@@ -203,11 +204,11 @@ def run_flagship(
     With images_path set, reads a pre-materialized image table from
     parquet (the Iceberg-table posture; generation excluded from timing
     per BASELINE.md protocol step 3) through read_images: the contract
-    schema `image_id string, lat double, lng double`, with no
-    schema-inference job.  The fused aggregate also counts the non-null
-    values of those three columns, and a non-empty table in which one of
-    them is all null (what a missing column reads as) raises ValueError
-    naming it."""
+    schema fixtures.IMAGE_SCHEMA, with no schema-inference job.  The
+    fused aggregate also counts the non-null values of `image_id`, `lat`
+    and `lng`; once both jobs have finished, a non-empty table in which
+    one of them is all null (what a missing column reads as) raises
+    ValueError naming it."""
     images = read_images(spark, images_path) if images_path else fixtures.images_table(spark, n_images)
     pts = cover_ops.with_point_cells(images)
     containment = containment_pipeline(spark, pts, strategy=strategy)
@@ -231,11 +232,11 @@ def run_flagship(
     with cf.ThreadPoolExecutor(max_workers=2) as pool:
         f_pairs = pool.submit(containment.count)
         f_agg = pool.submit(lambda: agg_df.collect()[0])
-        row = f_agg.result()
-        for c in columns:
-            if row["n"] and not row[c]:
-                raise ValueError(f"run_flagship: the images table has no non-null `{c}` column")
         n_pairs = f_pairs.result()
+        row = f_agg.result()
+    for c in columns:
+        if row["n"] and not row[c]:
+            raise ValueError(f"run_flagship: the images table has no non-null `{c}` column")
     tile_rows = row["n"] * len(zooms)
     if checkpoint_root:
         m = ckpt.write_snapshot(
